@@ -224,15 +224,9 @@ def _time_duck(qs, names, sf_dir: str) -> dict[str, float]:
     matching oracle_sql over the same parquet (BASELINE.md §3); forced
     with the vectorized arrow fetch (full computation, near-zero sink —
     the mirror of Spark's noop sink)."""
-    import duckdb
+    from scripts.gate_sim import duck_views
 
-    from lagom_kinesis_spark.catalog import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
     duck_times: dict[str, float] = {}
     for name in names:
         oracle = qs[name].oracle

@@ -28,19 +28,53 @@ Scale notes:
 
 from __future__ import annotations
 
+import threading
 import uuid
+import weakref
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Caller confs the loop session must mirror (beyond RUNTIME_CONFS):
 #: partition count decides the pinned layouts' width; the broadcast
 #: threshold keeps the caller's join-strategy posture (tests disable it to
 #: prove the SMJ co-partitioning; a driver harness may size it).
+#: Every other caller override (timezone, ANSI, case sensitivity) is
+#: replaced by tune()'s RUNTIME_CONFS inside the loop. That is safe only
+#: because the loop's own label math is long-only (equi-joins, min,
+#: least, coalesce over the id columns): no conf-sensitive expression is
+#: planned there.
 _MIRROR_CONFS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.autoBroadcastJoinThreshold",
 )
+
+#: caller session -> its AQE-off loop session, one clone per caller.
+_LOOP_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_LOOP_LOCK = threading.Lock()
+
+
+def _loop_session(caller: SparkSession) -> SparkSession:
+    """The caller's loop session: cloned and tuned once per caller session
+    and reused, so repeated calls add no sessions. AQE is off there, and
+    ``_MIRROR_CONFS`` are re-mirrored on every call so it carries what a
+    fresh tuned clone of the caller would."""
+    from lagom_kinesis_spark.session import RUNTIME_CONFS, tune
+
+    with _LOOP_LOCK:
+        loop = _LOOP_SESSIONS.get(caller)
+        if loop is None:
+            loop = _LOOP_SESSIONS[caller] = tune(caller.newSession())
+            loop.conf.set("spark.sql.adaptive.enabled", "false")
+    for k in _MIRROR_CONFS:
+        v = caller.conf.get(k, None)
+        if v is None:
+            v = RUNTIME_CONFS.get(k)
+        if v is None:
+            loop.conf.unset(k)
+        else:
+            loop.conf.set(k, v)
+    return loop
 
 
 def connected_components(
@@ -68,14 +102,7 @@ def connected_components(
         # of the intended message.
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     caller = pairs.sparkSession
-    from lagom_kinesis_spark.session import tune
-
-    loop = tune(caller.newSession())
-    for k in _MIRROR_CONFS:
-        v = caller.conf.get(k, None)
-        if v is not None:
-            loop.conf.set(k, v)
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    loop = _loop_session(caller)
     n_part = int(loop.conf.get("spark.sql.shuffle.partitions"))
     tag = uuid.uuid4().hex[:12]
     in_view, out_view = f"cc_pairs_{tag}", f"cc_labels_{tag}"
@@ -171,10 +198,11 @@ def connected_components(
         # caller's own AQE/settings like any other frame.
         out = labels.select("id", F.col("label").alias("cluster_id"))
         out.createOrReplaceGlobalTempView(out_view)
-        result = caller.table(f"global_temp.{out_view}")
-        # Pin the schema/plan then drop the handoff views — the result
-        # frame holds the analyzed plan, not the view name.
-        result = result.select("id", "cluster_id")
+        result = caller.table(f"global_temp.{out_view}").select("id", "cluster_id")
+        # Force analysis before ``finally`` drops the handoff views: the
+        # result must hold the resolved plan, not the view name, even on a
+        # frontend that analyzes lazily.
+        result._jdf.queryExecution().assertAnalyzed()
         return result
     finally:
         caller.catalog.dropGlobalTempView(in_view)

@@ -228,8 +228,8 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle_heavy: the oracle's unordered 3-way wedge join materializes
     # O(sum deg²) rows — DuckDB hit >100 GB on the 6M-edge sf1 graph
     # (the Spark side stays degree-ordered-bounded). Gate-scale only;
-    # scaled sweeps (scripts/sweep_sf1.py) skip it like the quadratic
-    # dedup oracles.
+    # scaled sweeps (scripts/gate_sim.py on a fixture larger than the
+    # gate's) skip it like the quadratic dedup oracles.
     tags=("graph", "join", "scalar", "oracle_heavy"),
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:

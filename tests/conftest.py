@@ -1,19 +1,16 @@
 """Shared fixtures: one SparkSession per test run + the DuckDB differential
-comparator that mirrors the driver's t2 gate (row count + schema-by-name +
-order-insensitive exact value comparison)."""
+assert, which is the oracle runner's compare (scripts/gate_sim.py): row
+count + case-folded column names + exact value hash over raw-name-sorted
+columns, order-insensitive."""
 
 from __future__ import annotations
 
-import datetime as _dt
-import decimal
-import math
 import os
 
-import duckdb
 import pytest
 
-from lagom_kinesis_spark.catalog import TABLES
 from lagom_kinesis_spark.session import get_spark
+from scripts.gate_sim import compare, diff_rows, duck_views, status
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -27,61 +24,17 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 
 
-def _canon(v):
-    """Canonicalize a cell so Spark and DuckDB values compare exactly."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return bool(v)
-    if isinstance(v, decimal.Decimal):
-        # Normalize scale: compare as exact string of the normalized value.
-        return ("dec", str(v.normalize()))
-    if isinstance(v, float):
-        if math.isnan(v):
-            return ("f", "nan")
-        return ("f", repr(v))
-    if isinstance(v, _dt.datetime):
-        return ("ts", v.replace(tzinfo=None).isoformat())
-    if isinstance(v, _dt.date):
-        return ("d", v.isoformat())
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
-    if isinstance(v, bytes):
-        return ("b", v)
-    return v
-
-
-def assert_matches_oracle(spark_df, duck_con, sql: str, check_rows: bool = True):
-    """Mirror of the driver compare: sort columns by RAW name (case-sensitive,
-    exactly like the driver's value hash — r5's transpose bug hid behind a
-    lowercase-first local sort), exact multiset of canonicalized rows.  The
-    schema-name check stays case-insensitive because the driver's own
-    schema_match folds case (it passed on the r5 red row); only the value
-    ordering is case-sensitive."""
-    duck_rel = duck_con.sql(sql)
-    duck_cols = list(duck_rel.columns)
-    spark_cols = list(spark_df.columns)
-    assert sorted(c.lower() for c in duck_cols) == sorted(
-        c.lower() for c in spark_cols
-    ), f"schema mismatch: spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
-    s_order = sorted(range(len(spark_cols)), key=lambda i: spark_cols[i])
-    d_order = sorted(range(len(duck_cols)), key=lambda i: duck_cols[i])
-
-    s_rows = [tuple(_canon(row[i]) for i in s_order) for row in spark_df.collect()]
-    d_rows = [tuple(_canon(row[i]) for i in d_order) for row in duck_rel.fetchall()]
-    assert len(s_rows) == len(d_rows), f"row count: spark={len(s_rows)} duck={len(d_rows)}"
-    s_rows.sort(key=repr)
-    d_rows.sort(key=repr)
-    mism = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]
-    assert not mism, f"{len(mism)} mismatching rows; first 3: {mism[:3]}"
+def assert_matches_oracle(spark_df, duck_con, sql: str) -> None:
+    """Fail unless the driver-shaped record of ``spark_df`` vs ``sql`` is a
+    PASS; the message carries the record and the first differing rows."""
+    spdf, dpdf = spark_df.toPandas(), duck_con.sql(sql).df()
+    rec = compare(spdf, dpdf)
+    assert status(rec) == "PASS", (
+        f"{rec}; spark cols={sorted(spdf.columns)} oracle cols={sorted(dpdf.columns)}; "
+        f"first differing (spark, oracle) rows: {diff_rows(spdf, dpdf)}"
+    )

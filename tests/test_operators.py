@@ -970,3 +970,33 @@ def test_connected_components_never_deadapts_caller_session(spark):
         if t.name.startswith("cc_")
     ]
     assert leftover == [], leftover
+
+
+def test_connected_components_reuses_one_loop_session(spark, monkeypatch):
+    """Two CC calls on one caller session share one AQE-off loop session,
+    so a long-lived driver does not accumulate sessions. The caller's
+    partition count is re-mirrored into the shared clone on every call."""
+    from pyspark.sql import SparkSession
+
+    from lagom_kinesis_spark.operators import components
+
+    clones: list[SparkSession] = []
+    new_session = SparkSession.newSession
+    monkeypatch.setattr(
+        SparkSession, "newSession", lambda self: clones.append(self) or new_session(self)
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    want = [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+    assert sorted(map(tuple, components.connected_components(pairs).collect())) == want
+    loop = components._LOOP_SESSIONS[spark]
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        assert sorted(map(tuple, components.connected_components(pairs).collect())) == want
+        assert loop.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    assert components._LOOP_SESSIONS[spark] is loop
+    assert len(clones) <= 1  # 0 when an earlier test already made the clone
+    assert loop.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -14,11 +14,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
-from lagom_kinesis_spark.catalog import TABLES
 from lagom_kinesis_spark.registry import all_queries
+from scripts.gate_sim import duck_views
 from tests.conftest import assert_matches_oracle
 
 SF01_DIR = "/root/testdata/sf0.1"
@@ -41,11 +40,7 @@ SMOKE_QUERIES = [
 
 @pytest.fixture(scope="module")
 def duck_sf01():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF01_DIR}/{t}.parquet')"
-        )
+    con = duck_views(SF01_DIR)
     yield con
     con.close()
 

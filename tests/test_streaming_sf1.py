@@ -20,11 +20,11 @@ import os
 import sys
 import time
 
-import duckdb
 import pytest
 
 from lagom_kinesis_spark.catalog import TABLES
 from lagom_kinesis_spark.registry import all_queries
+from scripts.gate_sim import duck_views
 from tests.conftest import assert_matches_oracle
 
 SF01_DIR = "/root/testdata/sf0.1"
@@ -48,14 +48,7 @@ def sf1_dir():
     if not all(
         os.path.exists(os.path.join(SF1_DIR, f"{t}.parquet")) for t in TABLES
     ):
-        sys.path.insert(
-            0,
-            os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                "scripts",
-            ),
-        )
-        from make_scaled_fixture import make
+        from scripts.make_scaled_fixture import make
 
         make(SF01_DIR, SF1_DIR, 10)
     return SF1_DIR
@@ -63,11 +56,7 @@ def sf1_dir():
 
 @pytest.fixture(scope="module")
 def duck_sf1(sf1_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf1_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf1_dir)
     yield con
     con.close()
 
