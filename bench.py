@@ -961,6 +961,7 @@ def _stream_steady_state(
     from lagom_kinesis_spark.queries.streaming_ops import (
         stream_shuffle_partitions,
     )
+    from lagom_kinesis_spark.session import scoped_confs
 
     # io_scratch folds the events fixture fingerprint into the path: a
     # regenerated fixture gets fresh chunks instead of a stale _SUCCESS
@@ -1034,24 +1035,16 @@ def _stream_steady_state(
             shutil.rmtree(ckpt, ignore_errors=True)
         return dt
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # Same partition rule the registered queries use: small-state for
     # tumbling (bounded |windows|x|types| state), volume rule for session.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(
-            stream_shuffle_partitions(
-                sf_dir, state="small" if shape == "tumbling" else "large"
-            )
-        ),
+    parts = stream_shuffle_partitions(
+        sf_dir, state="small" if shape == "tumbling" else "large"
     )
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         run(None)  # warm (lifecycle + codegen), untimed
         t_single = min(run(None) for _ in range(2))
         t_multi = min(run(1) for _ in range(2))
         t_life = min(run(None, src=empty_dir) for _ in range(2))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     marginal = max(0.0, (t_multi - t_single) / (n_chunks - 1))
     out = {
         "shape": shape,

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from lagom_kinesis_spark.catalog import register_views
 from lagom_kinesis_spark.registry import register
+from lagom_kinesis_spark.session import scoped_confs
 
 
 @register(
@@ -545,13 +546,11 @@ def sql_scripting_while(spark: SparkSession, sf_dir: str) -> DataFrame:
     final SELECT is one ordinary aggregate — scripting adds driver-side
     control flow only, never a per-row surface."""
     register_views(spark, sf_dir, ("orders",))
-    # Save/restore, like every other conf-touching query fn (the shared
-    # gate session must not stay mutated after this call): the conf only
-    # gates PARSING of the BEGIN block, which happens inside spark.sql(),
-    # so restoring after it returns cannot affect the returned DataFrame.
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    # Scoped (the shared gate session must not stay mutated after this
+    # call): the conf only gates PARSING of the BEGIN block, which happens
+    # inside spark.sql(), so restoring after it returns cannot affect the
+    # returned DataFrame.
+    with scoped_confs(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -570,8 +569,3 @@ def sql_scripting_while(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)

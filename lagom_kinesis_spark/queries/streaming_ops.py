@@ -28,11 +28,8 @@ from lagom_kinesis_spark.functions import events_cte, r6
 from lagom_kinesis_spark.queries.behavior import ATTRIBUTION_ORACLE
 from lagom_kinesis_spark.operators import sketches
 from lagom_kinesis_spark.registry import register
-from lagom_kinesis_spark.session import tune
-from lagom_kinesis_spark.streaming.topics import (
-    hint_stream_shuffle_partitions,
-    memory_sink_table,
-)
+from lagom_kinesis_spark.session import scoped_confs, tune
+from lagom_kinesis_spark.streaming.topics import memory_sink_table
 
 
 #: (path, mtime_ns, size) -> StructType. The probe is pure fixture
@@ -175,7 +172,7 @@ def _events_num_rows(sf_dir: str) -> int:
     # Cache key folds the recursive file list (path, mtime_ns, size per
     # leaf): changes confined to nested subdirs (a new day=/hour= file)
     # don't touch the top dir's mtime, so a top-dir-only key could serve a
-    # stale count and a stale partition hint (ADVICE r10). The glob +
+    # stale count and a stale partition count (ADVICE r10). The glob +
     # stats are the cheap part; the footer reads are what the cache saves.
     try:
         key = tuple(
@@ -228,11 +225,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view of the events topic (Kinesis-semantics source; file
     transport in tests, same TRIM_HORIZON = process-all-available replay —
     SURVEY.md §2B scans table). ts canonicalization identical to batch.
-
-    Also hints the volume-aware shuffle/state partition count to the next
-    memory_sink_table run (see stream_shuffle_partitions)."""
+    Its sinks take their partition count from stream_shuffle_partitions."""
     tune(spark)
-    hint_stream_shuffle_partitions(stream_shuffle_partitions(sf_dir))
     raw = (
         spark.readStream.schema(_events_raw_schema(spark, sf_dir))
         .parquet(stream_dir(sf_dir, "events"))
@@ -256,7 +250,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-minute tumbling window aggregation (streaming, UPDATE mode).
     State cardinality is |windows|×|event types| — volume-independent —
-    so the partition hint uses the small-state rule (r10 A/B: 1.30 s at
+    so the sink uses the small-state partition rule (r10 A/B: 1.30 s at
     8 partitions vs 1.87 s at the volume rule's 16, sf10).
 
     Update mode (r11, VERDICT r10 ask #1): complete mode re-emits the
@@ -270,9 +264,6 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs sink-side compaction (keep latest row per window key); the
     foreachBatch form of that compaction is proven in the same test."""
     src = events_stream(spark, sf_dir)
-    hint_stream_shuffle_partitions(
-        stream_shuffle_partitions(sf_dir, state="small")
-    )
     agg = (
         src
         .groupBy(F.window("ts", "5 minutes"), "event_type")
@@ -284,7 +275,9 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return memory_sink_table(agg, "update")
+    return memory_sink_table(
+        agg, "update", stream_shuffle_partitions(sf_dir, state="small")
+    )
 
 
 @register(
@@ -312,9 +305,6 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring for the r10 measurement and the chunked-replay compaction
     contract)."""
     src = events_stream(spark, sf_dir)
-    hint_stream_shuffle_partitions(
-        stream_shuffle_partitions(sf_dir, state="small")
-    )
     agg = (
         src
         .groupBy(F.window("ts", "10 minutes", "5 minutes"))
@@ -325,7 +315,9 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return memory_sink_table(agg, "update")
+    return memory_sink_table(
+        agg, "update", stream_shuffle_partitions(sf_dir, state="small")
+    )
 
 
 @register(
@@ -372,7 +364,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return memory_sink_table(agg, "complete")
+    return memory_sink_table(agg, "complete", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -398,7 +390,7 @@ def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_unique"))
     )
-    return memory_sink_table(deduped, "complete")
+    return memory_sink_table(deduped, "complete", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -430,7 +422,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("event_type")
         .agg(F.count("*").alias("n_unique"))
     )
-    return memory_sink_table(deduped, "complete")
+    return memory_sink_table(deduped, "complete", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -479,7 +471,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 10 MINUTES")),
     ).select("click_id", "purchase_id")
-    return memory_sink_table(joined, "append")
+    return memory_sink_table(joined, "append", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -534,7 +526,7 @@ def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 10 MINUTES")),
         "left_semi",
     ).select("click_id")
-    return memory_sink_table(joined, "append")
+    return memory_sink_table(joined, "append", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -575,7 +567,7 @@ def stream_key_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l.value").alias("last_value"),
         )
     )
-    return memory_sink_table(compacted, "complete")
+    return memory_sink_table(compacted, "complete", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -601,7 +593,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("n_events"))
     )
-    return memory_sink_table(joined, "complete")
+    return memory_sink_table(joined, "complete", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -622,7 +614,7 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n"), r6(F.sum("value")).alias("total_value"))
     )
-    return memory_sink_table(agg, "complete")
+    return memory_sink_table(agg, "complete", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -646,7 +638,7 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate is read from the finished state batch-side."""
     ev = events_stream(spark, sf_dir)
     regs = sketches.hll_registers(ev, F.col("user_id"), ("event_type",))
-    state = memory_sink_table(regs, "complete")
+    state = memory_sink_table(regs, "complete", stream_shuffle_partitions(sf_dir))
     return sketches.hll_estimate(state, ("event_type",), alias="est_users")
 
 
@@ -679,7 +671,7 @@ def stream_hll_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
     )
     regs = sketches.hll_registers(ev, F.col("user_id"), ("bucket_start",))
-    state = memory_sink_table(regs, "complete")
+    state = memory_sink_table(regs, "complete", stream_shuffle_partitions(sf_dir))
     return sketches.hll_estimate(state, ("bucket_start",), alias="est_users")
 
 
@@ -731,7 +723,7 @@ def stream_arbitrary_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    return memory_sink_table(out, "update")
+    return memory_sink_table(out, "update", stream_shuffle_partitions(sf_dir))
 
 
 #: Pure-python protobuf vendored on this image by the Cloud SDK — the only
@@ -753,28 +745,17 @@ class TransformWithStateUnavailable(RuntimeError):
     environment-limit message instead of an opaque worker crash."""
 
 
-def _rocksdb_sink(spark: SparkSession, out: DataFrame, output_mode: str) -> DataFrame:
-    """Run a bounded replay into a memory sink under the RocksDB state-
-    store provider, restoring the previous provider afterwards.
-
-    transformWithStateInPandas requires a provider that supports the v2
-    arbitrary-state API (typed value/list/map state + timers), which the
-    RocksDB provider does and the default in-memory HDFS-backed map does
-    not; other streaming queries keep the session default, so the conf
-    flip must be scoped to exactly this sink run (one shared helper —
-    four stream_tws_* queries use it — so the save/restore discipline
-    cannot drift between copies)."""
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key)
-    spark.conf.set(
-        provider_key,
+#: transformWithStateInPandas requires a provider that supports the v2
+#: arbitrary-state API (typed value/list/map state + timers), which the
+#: RocksDB provider does and the default in-memory HDFS-backed map does
+#: not; other streaming queries keep the session default, so the
+#: transformWithState sinks scope this to their own run.
+ROCKSDB_PROVIDER = {
+    "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        return memory_sink_table(out, output_mode)
-    finally:
-        spark.conf.set(provider_key, prev)
+        "RocksDBStateStoreProvider"
+    ),
+}
 
 
 def _enable_transform_with_state(spark: SparkSession) -> None:
@@ -913,7 +894,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
     )
-    return _rocksdb_sink(spark, out, "update")
+    with scoped_confs(spark, ROCKSDB_PROVIDER):
+        return memory_sink_table(out, "update", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -987,12 +969,8 @@ def stream_tws_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     nd_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(nd_key)
-    spark.conf.set(nd_key, "false")
-    try:
-        return _rocksdb_sink(spark, out, "update")
-    finally:
-        spark.conf.set(nd_key, prev)
+    with scoped_confs(spark, {**ROCKSDB_PROVIDER, nd_key: "false"}):
+        return memory_sink_table(out, "update", stream_shuffle_partitions(sf_dir))
 
 
 @register("stream_rate_source_smoke", oracle=None, tags=("streaming", "smoke"))
@@ -1239,7 +1217,8 @@ def stream_tws_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
     )
-    return _rocksdb_sink(spark, out, "update")
+    with scoped_confs(spark, ROCKSDB_PROVIDER):
+        return memory_sink_table(out, "update", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -1382,7 +1361,8 @@ def stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="EventTime",
         )
     )
-    return _rocksdb_sink(spark, out, "append")
+    with scoped_confs(spark, ROCKSDB_PROVIDER):
+        return memory_sink_table(out, "append")
 
 
 @register(
@@ -1463,7 +1443,8 @@ def stream_tws_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
     )
-    return _rocksdb_sink(spark, out, "update")
+    with scoped_confs(spark, ROCKSDB_PROVIDER):
+        return memory_sink_table(out, "update", stream_shuffle_partitions(sf_dir))
 
 
 # NOTE (r8): an r6-era conditional registration of
@@ -2179,9 +2160,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # safely disabled for this query (production continuous mode would use
     # append + watermark finalization instead).
     check_key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    prev_check = spark.conf.get(check_key)
-    spark.conf.set(check_key, "false")
-    try:
+    with scoped_confs(spark, {check_key: "false"}):
         l1 = (
             events_stream(spark, sf_dir)
             .withWatermark("ts", "1 hour")  # required to chain stateful ops
@@ -2202,11 +2181,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_buckets",
             )
         )
-        return memory_sink_table(l2, "complete")
-    finally:
-        # restore the SAVED value, not a hardcoded "true" — clobbering
-        # would silently flip a caller's own setting for the session
-        spark.conf.set(check_key, prev_check)
+        return memory_sink_table(l2, "complete", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -2303,7 +2278,7 @@ def stream_append_finalized_windows(spark: SparkSession, sf_dir: str) -> DataFra
             "n",
         )
     )
-    return memory_sink_table(agg, "append")
+    return memory_sink_table(agg, "append", stream_shuffle_partitions(sf_dir))
 
 
 @register(
@@ -2471,7 +2446,7 @@ def stream_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.floor(F.col("value") / 8).cast("long").alias("bucket")
     )
     hist = ev.groupBy("event_type", "bucket").agg(F.count("*").alias("n"))
-    state = memory_sink_table(hist, "complete")
+    state = memory_sink_table(hist, "complete", stream_shuffle_partitions(sf_dir))
     by_type = W.partitionBy("event_type")
     c = state.select(
         "event_type",
@@ -2523,21 +2498,19 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint must outlive this call (the returned DataFrame reads it
     # lazily); fresh_scratch_dir defers deletion to the next invocation
     ck = fresh_scratch_dir("statescan")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "4"}):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
     try:
         q.awaitTermination()
     finally:
         q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         _unload_state_stores(spark)
         try:
             spark.catalog.dropTempView(name)
@@ -2717,7 +2690,7 @@ def stream_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return memory_sink_table(out, "append")
+    return memory_sink_table(out, "append", stream_shuffle_partitions(sf_dir))
 
 
 def attribution_stateful(key, pdfs, state):

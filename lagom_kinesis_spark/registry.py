@@ -90,16 +90,6 @@ def register(
                 spark.catalog.clearCache()
             except Exception:
                 pass
-            # A volume hint left by a query that sourced events_stream but
-            # sank outside memory_sink_table must not leak into this one.
-            try:
-                from lagom_kinesis_spark.streaming.topics import (
-                    clear_stream_shuffle_hint,
-                )
-
-                clear_stream_shuffle_hint()
-            except Exception:
-                pass
             _periodic_gc(spark)
             return fn(spark, sf_dir)
 

@@ -17,6 +17,8 @@ AQE shrinks from there; locally we pin it to the core count.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -79,8 +81,8 @@ RUNTIME_CONFS: dict[str, str] = {
 #: Sessions already tuned: tune() is called on every catalog.load and from
 #: many query entry points — ~13 py4j conf roundtrips each time adds tens
 #: of ms of pure fixed cost per query. Confs set once on a session stay set
-#: (the only in-repo mutation, memory_sink_table's shuffle-partition
-#: override, restores its previous value), so re-applying per call buys
+#: (every other in-repo conf change goes through :func:`scoped_confs`,
+#: which restores the previous state), so re-applying per call buys
 #: nothing. Keyed on id(session) with the session object PINNED in the
 #: value: the earlier JVM identity hashCode() is NOT unique across
 #: sessions, and a collision would silently skip correctness-critical
@@ -118,6 +120,25 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on ``spark`` for the body, then restore each key: to
+    its previous value, or unset again if it was unset before. The unset
+    case matters: ``conf.get(k)`` returns a default that ``conf.set`` would
+    then pin explicitly."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def _gc_stale_local_dirs(root: str, max_age_s: float = 6 * 3600) -> None:
     """Reclaim shuffle dirs a crashed JVM left pinned in tmpfs: RAM-backed
     leftovers accumulate until the free-space gate below fails and every
@@ -149,6 +170,8 @@ def get_spark(app_name: str = "lagom-kinesis-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
+        # Console progress bars share lines with a non-tty run's output.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     # Shuffle/spill files on tmpfs when available: a long single-host suite

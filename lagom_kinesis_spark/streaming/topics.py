@@ -37,17 +37,21 @@ Structured Streaming:
 
 from __future__ import annotations
 
+import logging
 import os
 import random
 import time
 import uuid
+from collections import deque
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lagom_kinesis_spark.session import tune
+from lagom_kinesis_spark.session import scoped_confs, tune
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -59,6 +63,12 @@ class BackoffConfig:
     random_factor: float = 0.2
 
 
+#: Failures run_with_backoff keeps: a supervisor that runs for days must
+#: not hold every exception (and its traceback frames) it ever saw; the
+#: log carries the full history.
+FAILURE_WINDOW = 32
+
+
 def run_with_backoff(
     start: Callable[[], object],
     should_continue: Callable[[], bool],
@@ -66,20 +76,26 @@ def run_with_backoff(
     rng: random.Random | None = None,
     sleep: Callable[[float], None] = time.sleep,
 ) -> list[Exception]:
-    """Restart loop around a streaming query (R10). Returns failures seen."""
+    """Restart loop around a streaming query (R10). Logs every restart and
+    returns the last FAILURE_WINDOW failures, oldest first."""
     rng = rng or random.Random(42)
     delay = backoff.min_s
-    failures: list[Exception] = []
+    failures: deque[Exception] = deque(maxlen=FAILURE_WINDOW)
+    attempt = 0
     while should_continue():
         try:
             start()
             delay = backoff.min_s  # successful run resets the backoff
         except Exception as e:  # noqa: BLE001 — supervision boundary
+            attempt += 1
             failures.append(e)
             jitter = 1.0 + backoff.random_factor * rng.random()
-            sleep(min(delay * jitter, backoff.max_s))
+            wait = min(delay * jitter, backoff.max_s)
+            msg = "stream restart %d after %s: %s; retrying in %.2f s"
+            _log.warning(msg, attempt, type(e).__name__, e, wait, exc_info=e)
+            sleep(wait)
             delay = min(delay * 2, backoff.max_s)
-    return failures
+    return list(failures)
 
 
 _GROUP_ID_BAD = set(' /\\:*?"<>|\t\n')
@@ -630,61 +646,27 @@ def fresh_scratch_dir(tag: str) -> str:
     _scratch_dirs[tag] = d
     return d
 
-#: Streaming shuffle/state partitions for the bounded-replay harness. The
-#: number of state-store instances per stateful op == shuffle partitions at
-#: query start; fixture replays are single-batch and small, so 4 keeps state
-#: provider count (and per-query setup) low — measured ~20% off each
-#: harness streaming query vs 8 (r4, custom tiny-source queries). A
-#: production continuous job sizes this to cluster cores like any other
-#: shuffle — which is exactly what the volume hint below does for the
-#: events-fixture replays.
-_STREAM_SHUFFLE_PARTITIONS = "4"
-
-#: One-shot volume-aware override, set by source constructors that know
-#: their input size (streaming_ops.events_stream) and consumed by the next
-#: memory_sink_table run. The r9 A/B showed the pinned 4 serializing the
-#: data work at scale (sf10 session window 2.15 s @4 → 1.09 s @16, sf10
-#: tumbling 0.89 → 0.80 @8) while 8 is also neutral-to-better at sf0.1.
-#: A hint, not a conf: the source constructor runs at plan time, but the
-#: partition count must be set around the sink's start() — and it must
-#: not leak past one run (cleared in memory_sink_table's finally).
-_PARTS_HINT: str | None = None
-
-
-def hint_stream_shuffle_partitions(n: int) -> None:
-    """Declare the shuffle/state partition count for the NEXT
-    memory_sink_table run (volume-aware sources only; see _PARTS_HINT)."""
-    global _PARTS_HINT
-    _PARTS_HINT = str(int(n))
-
-
-def clear_stream_shuffle_hint() -> None:
-    """Drop any pending one-shot partition hint. The public reset for
-    callers outside this module (the registry wrapper clears a hint left
-    by a query that sourced events_stream but sank outside
-    memory_sink_table) — keeping knowledge of _PARTS_HINT's lifecycle in
-    one place instead of letting callers poke the private global
-    (ADVICE r9)."""
-    global _PARTS_HINT
-    _PARTS_HINT = None
-
-
-def memory_sink_table(df: DataFrame, output_mode: str = "append") -> DataFrame:
+def memory_sink_table(
+    df: DataFrame, output_mode: str = "append", partitions: int = 4
+) -> DataFrame:
     """Run a (bounded) streaming DataFrame to completion into a memory sink
     and return the result table — the harness device for batch-equivalence
-    oracles (SURVEY.md §5.2 layer 2)."""
+    oracles (SURVEY.md §5.2 layer 2).
+
+    ``partitions`` is the shuffle/state partition count: Structured
+    Streaming fixes a stateful query's state-store instance count from
+    ``spark.sql.shuffle.partitions`` at start(), where the query clones the
+    session conf, so it is set around start() only. The default 4 suits
+    the small custom-source replays (~20% off each harness query vs 8,
+    measured r4); events replays pass
+    ``streaming_ops.stream_shuffle_partitions`` instead."""
     spark = df.sparkSession
     while _prior_sinks:
         try:
             spark.catalog.dropTempView(_prior_sinks.pop())
         except Exception:
             pass
-    global _PARTS_HINT
     name = f"ms_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _PARTS_HINT or _STREAM_SHUFFLE_PARTITIONS
-    )
     q = None
     # Registered BEFORE start(): the memory sink creates the temp view as
     # soon as the query starts, so a failure in awaitTermination() (batch
@@ -694,22 +676,18 @@ def memory_sink_table(df: DataFrame, output_mode: str = "append") -> DataFrame:
     # never registered a view is a no-op under the except above.
     _prior_sinks.append(name)
     try:
-        # start() itself can raise (e.g. append mode on an un-watermarked
-        # aggregation) — it must sit INSIDE the try or the session-wide
-        # shuffle-partition override leaks to every later batch query.
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(partitions)}):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
         q.awaitTermination()
     finally:
         if q is not None:
             q.stop()
-        _PARTS_HINT = None
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         # bench.py opts out (SPARK_GRAFT_STREAM_UNLOAD=0) and does NOT
         # unload at all for the bench process: stop() costs ~70 ms
         # (measured r8) and would otherwise land inside every timed
@@ -719,9 +697,7 @@ def memory_sink_table(df: DataFrame, output_mode: str = "append") -> DataFrame:
         # sf0.1-sized state) is bounded and tiny (bench.py:84). Gate/
         # pytest sweeps keep the per-call unload — that's what bounds
         # provider growth across a 300-query session.
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_STREAM_UNLOAD") != "0":
+        if os.environ.get("SPARK_GRAFT_STREAM_UNLOAD") != "0":
             _unload_state_stores(spark)
     return spark.table(name)
 

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lagom_kinesis_spark.catalog import load
+from lagom_kinesis_spark.session import scoped_confs
 from tests.conftest import SF_DIR
 
 
@@ -34,9 +35,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     # Disable auto-broadcast: at test scale Catalyst would broadcast the
     # dim side; the point here is the big⋈big case where bucketing removes
     # the shuffle a SortMergeJoin would otherwise need.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         li = spark.table("b_lineitem")
         o = spark.table("b_orders")
         joined = li.join(o, li.l_orderkey == o.o_orderkey).select(
@@ -47,8 +46,6 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
         )
         assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan[:800]}"
         assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     # And it is correct: row count matches the plain parquet join.
     plain = load(spark, SF_DIR, "lineitem").join(
         load(spark, SF_DIR, "orders"),

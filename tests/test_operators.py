@@ -12,6 +12,7 @@ from lagom_kinesis_spark.operators import multimodal
 from lagom_kinesis_spark.operators.similarity import simhash_signatures
 from lagom_kinesis_spark.operators.text import tokens
 from lagom_kinesis_spark.registry import all_queries
+from lagom_kinesis_spark.session import scoped_confs
 from tests.conftest import SF_DIR
 
 QS = all_queries()
@@ -856,7 +857,7 @@ def test_shingle_hash_proxy_is_injective_on_fixture(spark):
     )
 
 
-def test_connected_components_iterations_plan_one_shuffle(spark):
+def test_connected_components_iterations_plan_one_shuffle(spark, monkeypatch):
     """r12 (cont.): the per-iteration loop body must plan exactly ONE
     shuffle — the dst-side neighbor-min aggregation. The edges/labels
     join sides ride the checkpoint-preserved hash(src)/hash(id) layouts,
@@ -875,8 +876,6 @@ def test_connected_components_iterations_plan_one_shuffle(spark):
         from pyspark.sql import DataFrame
 
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    bcast_before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     captured: list[tuple[list[str], str]] = []
     real_lc = DataFrame.localCheckpoint
 
@@ -889,8 +888,8 @@ def test_connected_components_iterations_plan_one_shuffle(spark):
         )
         return real_lc(self, eager)
 
-    DataFrame.localCheckpoint = spy_lc
-    try:
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy_lc)
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)],
             "id_a long, id_b long",
@@ -899,9 +898,6 @@ def test_connected_components_iterations_plan_one_shuffle(spark):
             (r.id, r.cluster_id)
             for r in connected_components(pairs).collect()
         }
-    finally:
-        DataFrame.localCheckpoint = real_lc
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast_before)
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)}
     # the operator must restore the session's AQE setting on exit
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
@@ -989,13 +985,9 @@ def test_connected_components_reuses_one_loop_session(spark, monkeypatch):
     want = [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
     assert sorted(map(tuple, components.connected_components(pairs).collect())) == want
     loop = components._LOOP_SESSIONS[spark]
-    parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "3"}):
         assert sorted(map(tuple, components.connected_components(pairs).collect())) == want
         assert loop.conf.get("spark.sql.shuffle.partitions") == "3"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
     assert components._LOOP_SESSIONS[spark] is loop
     assert len(clones) <= 1  # 0 when an earlier test already made the clone
     assert loop.conf.get("spark.sql.adaptive.enabled") == "false"

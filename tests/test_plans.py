@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from lagom_kinesis_spark.catalog import load
 from lagom_kinesis_spark.registry import all_queries
+from lagom_kinesis_spark.session import scoped_confs
 from tests.conftest import SF_DIR
 
 QS = all_queries()
@@ -260,10 +261,7 @@ def test_bloom_runtime_filter_injects_on_shuffle_join(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k) for k in lowered}
-    try:
-        for k, v in lowered.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, lowered):
         li = load(spark, SF_DIR, "lineitem")
         o = load(spark, SF_DIR, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -276,9 +274,6 @@ def test_bloom_runtime_filter_injects_on_shuffle_join(spark):
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "bloom_filter_agg" in plan
         assert "might_contain" in plan
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 def test_minhash_lsh_is_banded_equi_join_not_cartesian(spark):
@@ -366,10 +361,7 @@ def test_aqe_skew_split_applies_to_shuffled_hash_join(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, confs):
         # 200k rows on ONE hot key vs a uniform build side.
         probe = spark.range(200_000).select(
             F.lit(7).alias("k"), F.col("id").alias("payload")
@@ -388,12 +380,6 @@ def test_aqe_skew_split_applies_to_shuffled_hash_join(spark):
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin(skew=true)" in plan
         assert "AQEShuffleRead coalesced and skewed" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_bm25_topk_is_take_ordered_with_filtered_explode(spark):

@@ -17,6 +17,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from lagom_kinesis_spark.queries.streaming_ops import ROCKSDB_PROVIDER
+from lagom_kinesis_spark.session import scoped_confs
+
 
 @pytest.fixture()
 def three_batch_source(spark, tmp_path):
@@ -80,19 +83,9 @@ def test_rocksdb_state_store_provider(spark):
     from lagom_kinesis_spark.registry import all_queries
     from tests.conftest import SF_DIR
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_confs(spark, ROCKSDB_PROVIDER):
         df = all_queries()["stream_session_window"].fn(spark, SF_DIR)
         assert df.count() > 0
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_event_time_timeout_evicts_idle_keys(spark, tmp_path):
@@ -363,13 +356,7 @@ def test_transform_with_state_matches_batch(spark, tmp_path):
     out = stream.groupBy("user_id").transformWithStateInPandas(
         Sum(), outputStructType=out_schema, outputMode="Update", timeMode="None"
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_confs(spark, ROCKSDB_PROVIDER):
         q = (
             out.writeStream.format("memory")
             .queryName("tws_xbatch_tbl")
@@ -381,8 +368,6 @@ def test_transform_with_state_matches_batch(spark, tmp_path):
         q.awaitTermination()
         assert len(q.recentProgress) >= 2, "expected one batch per file"
         q.stop()
-    finally:
-        spark.conf.set(provider_key, prev)
     # running state is monotone in n, so the row with the largest n per
     # user is the final update — no reliance on memory-sink row order
     latest: dict[int, tuple[int, float]] = {}
@@ -473,20 +458,11 @@ def test_tws_ttl_state_expires(spark, tmp_path):
         # memory sink cannot recover from a checkpoint; foreachBatch can —
         # it is the restart-capable sink the topics layer itself uses
         got: list = []
-        provider_key = "spark.sql.streaming.stateStore.providerClass"
-        nd_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-        prev = spark.conf.get(provider_key)
-        prev_nd = spark.conf.get(nd_key)
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
         # ProcessingTime mode + availableNow never terminates with no-data
         # batches on (they keep advancing the TTL clock) — same scoping as
         # the registered query
-        spark.conf.set(nd_key, "false")
-        try:
+        nd_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        with scoped_confs(spark, {**ROCKSDB_PROVIDER, nd_key: "false"}):
             # batches land as subdirectories: glob one level like the
             # tws cross-batch test above
             stream = spark.readStream.schema(
@@ -511,9 +487,6 @@ def test_tws_ttl_state_expires(spark, tmp_path):
             )
             q.awaitTermination()
             q.stop()
-        finally:
-            spark.conf.set(provider_key, prev)
-            spark.conf.set(nd_key, prev_nd)
         return got
 
     write("b1", [(1, 10.0), (1, 2.0)])
@@ -558,25 +531,53 @@ def test_stream_shuffle_partitions_volume_rule(monkeypatch):
         assert so.stream_shuffle_partitions("/any") == want, rows
 
 
-def test_parts_hint_consumed_once(spark):
-    """The one-shot hint must apply to exactly the next memory_sink_table
-    run and never leak (a stale hint would repartition an unrelated tiny
-    custom-source query)."""
-    from lagom_kinesis_spark.streaming import topics
-
-    topics.hint_stream_shuffle_partitions(11)
-    assert topics._PARTS_HINT == "11"
-    df = (
+def _rate_counts(spark):
+    # rate + availableNow terminates after one batch
+    return (
         spark.readStream.format("rate")
         .option("rowsPerSecond", "1")
         .load()
         .groupBy("value")
         .count()
     )
-    # run a trivial bounded query through the sink; rate + availableNow
-    # terminates after one batch
-    topics.memory_sink_table(df, "complete")
-    assert topics._PARTS_HINT is None
+
+
+def test_sink_partition_count_reaches_state_store(spark, monkeypatch):
+    """memory_sink_table's explicit count sizes the stateful operator:
+    Structured Streaming fixes the state-store instance count from
+    shuffle.partitions at start(). The caller's conf is untouched after."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from lagom_kinesis_spark.streaming import topics
+
+    started = []
+    real_start = DataStreamWriter.start
+
+    def spy_start(self, *a, **k):
+        started.append(real_start(self, *a, **k))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy_start)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    topics.memory_sink_table(_rate_counts(spark), "complete", partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    (q,) = started
+    ops = [op for p in q.recentProgress for op in p.stateOperators]
+    assert ops
+    assert {(op.numShufflePartitions, op.numStateStoreInstances) for op in ops} == {
+        (3, 3)
+    }
+
+
+def test_memory_sink_restores_partitions_when_start_raises(spark):
+    """start() itself can raise (append mode on an un-watermarked
+    aggregation); the partition override must not outlive it."""
+    from lagom_kinesis_spark.streaming import topics
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(Exception, match="(?i)append"):
+        topics.memory_sink_table(_rate_counts(spark), "append", partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_bench_stream_steady_state_contract(spark):

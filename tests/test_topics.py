@@ -255,6 +255,25 @@ def test_backoff_parameters():
         assert b >= a * 0.99  # monotone growth up to the cap
 
 
+def test_backoff_logs_every_restart_and_keeps_a_bounded_window(caplog):
+    """Each restart logs its exception class, attempt and delay; only the
+    last FAILURE_WINDOW failures are returned."""
+    from lagom_kinesis_spark.streaming import topics
+
+    errs = [ValueError(f"boom {i}") for i in range(1, topics.FAILURE_WINDOW + 6)]
+    pending = list(errs)
+
+    def fail():
+        raise pending.pop(0)
+
+    with caplog.at_level("WARNING", logger=topics.__name__):
+        failures = run_with_backoff(fail, lambda: bool(pending), sleep=lambda s: None)
+    msgs = [r.getMessage() for r in caplog.records if r.name == topics.__name__]
+    assert len(msgs) == len(errs)
+    assert msgs[0].startswith("stream restart 1 after ValueError: boom 1; retrying")
+    assert failures == errs[-topics.FAILURE_WINDOW:]
+
+
 def test_at_most_once_staging_retry_is_idempotent(topic, tmp_path):
     """Crash in the stage-retry window: the staging write lands but the
     streaming checkpoint does not commit, so the SAME epoch_id is replayed.
