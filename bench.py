@@ -7,6 +7,11 @@ Runs the headline query suite at $SPARK_GRAFT_SF_DIR (default
 Each query is forced with the noop sink (full computation of every output
 column, nothing written or serialized to the driver); DuckDB's mirror is
 the vectorized arrow fetch. See _time_spark for why count() was wrong.
+
+Other modes: ``--scaling`` (the sf0.001→sf10 ratio trajectory, see
+scaling_main) and ``--ab ARM_A ARM_B --queries q1,q2 [--reps N] [--out
+PATH]`` (an interleaved fresh-process A/B of two git revisions, see
+ab_main).
 """
 
 from __future__ import annotations
@@ -82,6 +87,10 @@ TRAJECTORY = [
 ]
 
 
+def _sf_dir() -> str:
+    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
 def _cpus_env() -> int | str:
     try:
         return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -135,6 +144,56 @@ def _task_counts(spark, group: str) -> dict[str, int]:
         return {}
 
 
+def _reset_cache_state(spark) -> None:
+    """Untimed, before every timed run. Queries that persist()
+    intermediates (dedup_minhash_lsh's shingle frame) leave the previous
+    run's cached RDD in executor storage until the async ContextCleaner
+    collects it — nondeterministic memory pressure that swung the
+    driver-recorded minhash number +80% in r5. Clearing the cache and
+    nudging GC makes every run pay the identical, reproducible cost.
+    State-store providers are NOT unloaded during the bench
+    (SPARK_GRAFT_STREAM_UNLOAD=0 disables memory_sink_table's per-call
+    unload): StateStore.stop() costs ~70 ms timed, and unloading between
+    runs just moves the maintenance-machinery RESTART into the next timed
+    run. Provider growth over one bench (a handful of streaming entries ×
+    ≤7 runs × 4 partitions of sf0.1-sized state) is bounded and tiny; the
+    300-query gate sweeps keep the per-call unload."""
+    try:
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()  # noqa: SLF001
+    except Exception:
+        pass
+
+
+def _force(df) -> None:
+    """The noop-sink force: compute every output column, write nothing."""
+    df.write.mode("overwrite").format("noop").save()
+
+
+def _timed_force(spark, fn, sf_dir: str, group: str | None = None):
+    """One timed run: a cache reset, then ``_force(fn(spark, sf_dir))``
+    on the clock. Returns (frame, seconds, task counts). With ``group``
+    the run's jobs go under that job group and its task/stage counts are
+    returned, else {}. setJobGroup is a thread-local property write —
+    nanoseconds, and made OUTSIDE the timed region."""
+    _reset_cache_state(spark)
+    sc = spark.sparkContext
+    if group:
+        sc.setJobGroup(group, group)
+    t0 = time.time()
+    df = fn(spark, sf_dir)
+    _force(df)
+    secs = time.time() - t0
+    if not group:
+        return df, secs, {}
+    counts = _task_counts(spark, group)
+    try:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    except Exception:  # noqa: BLE001
+        pass
+    return df, secs, counts
+
+
 def _time_spark(
     qs, spark, names, sf_dir: str
 ) -> tuple[dict[str, float], dict[str, dict]]:
@@ -149,30 +208,6 @@ def _time_spark(
     agg_pricing_summary 0.50 s under count vs 1.09 s honest;
     win_running_total 0.12 vs 0.32). DuckDB's matching force is the
     vectorized arrow fetch: full computation, near-zero sink either side."""
-    def _reset_cache_state() -> None:
-        # Queries that persist() intermediates (dedup_minhash_lsh's shingle
-        # frame) leave the previous run's cached RDD in executor storage
-        # until the async ContextCleaner collects it — nondeterministic
-        # memory pressure that swung the driver-recorded minhash number
-        # +80% in r5 (VERDICT r5 "What's wrong" #3). Clearing the cache and
-        # nudging GC between iterations (untimed) makes every run pay the
-        # identical, reproducible cost. State-store providers are NOT
-        # unloaded during the bench (SPARK_GRAFT_STREAM_UNLOAD=0 in main()
-        # disables memory_sink_table's per-call unload): StateStore.stop()
-        # costs ~70 ms timed, and unloading between runs just moves the
-        # maintenance-machinery RESTART into the next timed run. Provider
-        # growth over one bench (a handful of streaming entries × ≤7 runs
-        # × 4 partitions of sf0.1-sized state) is bounded and tiny; the
-        # 300-query gate sweeps keep the per-call unload.
-        try:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-        except Exception:
-            pass
-
-    def force(df) -> None:
-        df.write.mode("overwrite").format("noop").save()
-
     times: dict[str, float] = {}
     telemetry: dict[str, dict] = {}
     for name in names:
@@ -184,35 +219,18 @@ def _time_spark(
         n = fn(spark, sf_dir).count()  # rows probe, untimed
         prev = None
         for _ in range(4):
-            _reset_cache_state()
-            t0 = time.time()
-            force(fn(spark, sf_dir))
-            t = time.time() - t0
+            _, t, _ = _timed_force(spark, fn, sf_dir)
             if prev is not None and t > prev * 0.75:
                 break
             prev = t
         best = float("inf")
         for i in range(3):
-            _reset_cache_state()
-            if i == 2:
-                # Tag the LAST timed rep with a job group so its task/
-                # stage counts are attributable afterwards (r13, VERDICT
-                # r12 ask #2). setJobGroup is a thread-local property
-                # write — nanoseconds, and set OUTSIDE the timed region.
-                spark.sparkContext.setJobGroup(
-                    f"bench:{name}:final", f"bench:{name}"
-                )
-            t0 = time.time()
-            force(fn(spark, sf_dir))
-            best = min(best, time.time() - t0)
-            if i == 2:
-                telemetry[name] = _task_counts(spark, f"bench:{name}:final")
-                try:
-                    spark.sparkContext.setLocalProperty(
-                        "spark.jobGroup.id", None
-                    )
-                except Exception:  # noqa: BLE001
-                    pass
+            # Tag the LAST timed rep with a job group so its task/stage
+            # counts are attributable afterwards (r13, VERDICT r12 ask #2).
+            group = f"bench:{name}:final" if i == 2 else None
+            _, t, counts = _timed_force(spark, fn, sf_dir, group)
+            best = min(best, t)
+        telemetry[name] = counts
         spark.sparkContext.setJobDescription(None)
         times[name] = round(best, 3)
         print(f"# {name} @ {sf_dir}: {times[name]}s ({n} rows)", file=sys.stderr)
@@ -464,7 +482,7 @@ def _thermal_gate(max_wait_s: float = 420.0) -> None:
         waited += 30.0
 
 
-def main() -> None:
+def main(headline: list[str]) -> None:
     _settle_load()
     probe_pre = _contention_probe()
     # Headline gate (VERDICT r11 ask #1): BENCH_r9 and BENCH_r11 both
@@ -490,7 +508,7 @@ def main() -> None:
             "recovered": not reprobe.get("contended", False),
         }
         probe_pre = reprobe
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = _sf_dir()
     # Parse the scale factor up front and degrade to the raw string for
     # fixture dirs that don't end in sf<number> — a ValueError inside the
     # final json.dumps would throw away the whole measured run.
@@ -499,13 +517,6 @@ def main() -> None:
         sf = float(sf_raw)
     except ValueError:
         sf = sf_raw
-    # Optional subset (comma-separated names) for targeted runs — e.g. the
-    # floor-analysis sweep at a synthetic larger SF (BENCH_NOTES.md). The
-    # driver's per-round protocol leaves this unset and times the full suite.
-    headline = HEADLINE
-    subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
-    if subset:
-        headline = [q.strip() for q in subset.split(",") if q.strip()]
     from lagom_kinesis_spark.registry import all_queries
     from lagom_kinesis_spark.session import get_spark
 
@@ -567,23 +578,16 @@ def main() -> None:
     # the engine's simulated-transport produce and consume rates on the
     # events table so the "matches-or-beats reference throughput" claim is
     # a recorded number, not an assertion.
-    transport: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_TRANSPORT", "1") == "0":
-        print("# transport bench disabled via env", file=sys.stderr)
-    else:
-        transport = _transport_bench(spark, sf_dir)
+    transport = _transport_bench(spark, sf_dir)
 
     # Streaming steady state: the amortized per-micro-batch number the
     # cold-query headline protocol cannot show (see _stream_steady_state).
     steady: dict = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_STEADY", "1") == "0":
-        print("# steady-state bench disabled via env", file=sys.stderr)
-    else:
-        for shp in ("tumbling", "session"):
-            try:
-                steady[shp] = _stream_steady_state(spark, sf_dir, shape=shp)
-            except Exception as e:  # noqa: BLE001 — metric is best-effort
-                print(f"# steady-state [{shp}] skipped: {e}", file=sys.stderr)
+    for shp in ("tumbling", "session"):
+        try:
+            steady[shp] = _stream_steady_state(spark, sf_dir, shape=shp)
+        except Exception as e:  # noqa: BLE001 — metric is best-effort
+            print(f"# steady-state [{shp}] skipped: {e}", file=sys.stderr)
 
     probe_post = _contention_probe()
     contended = bool(
@@ -705,11 +709,13 @@ SF30_SUBSET = [
 ]
 
 
-def scaling_tier_main(sf_dir: str, tier_out: str) -> None:
+def scaling_tier_main(
+    sf_dir: str, tier_out: str, subset: list[str] | None = None
+) -> None:
     """One tier of the scaling trajectory, in its own process: fresh
-    SparkSession + fresh DuckDB, TRAJECTORY queries timed under the
-    headline protocol, result JSON to ``tier_out``. Honors
-    SPARK_GRAFT_TIER_QUERIES (comma list) for restricted tiers (sf30)."""
+    SparkSession + fresh DuckDB, TRAJECTORY (or ``subset``, for restricted
+    tiers such as sf30) timed under the headline protocol, result JSON to
+    ``tier_out``."""
     _settle_load()  # tiers launch right after fixture builds / prior JVMs
     probe_pre = _contention_probe()
     from lagom_kinesis_spark.registry import all_queries
@@ -719,10 +725,7 @@ def scaling_tier_main(sf_dir: str, tier_out: str) -> None:
     os.environ["SPARK_GRAFT_GC_NUDGE"] = "0"
     os.environ["SPARK_GRAFT_STREAM_UNLOAD"] = "0"
     qs = all_queries()
-    names = TRAJECTORY
-    subset = os.environ.get("SPARK_GRAFT_TIER_QUERIES")
-    if subset:
-        names = [q.strip() for q in subset.split(",") if q.strip()]
+    names = subset or TRAJECTORY
     spark_t, _telemetry = _time_spark(qs, spark, names, sf_dir)
     try:
         duck_t = _time_duck(qs, names, sf_dir)
@@ -805,7 +808,7 @@ def scaling_main(out_path: str, skip_sf10: bool = False) -> None:
     sys.path.insert(0, scripts_dir)
     from make_scaled_fixture import FACTS
 
-    base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    base = _sf_dir()
     floor_dir = os.path.join(os.path.dirname(base.rstrip("/")), "sf0.001")
     scale_root = "/tmp/lagom_kinesis_spark/scale"
     # sf30 (ask r9 #8): third decade for the join family only, gated on
@@ -878,14 +881,10 @@ def scaling_main(out_path: str, skip_sf10: bool = False) -> None:
         # turbo clock and taints the later tiers (r11) — wait for the
         # single-thread burn to read clean before launching the next one.
         _thermal_gate()
-        env = dict(os.environ)
+        cmd = [sys.executable, self_path, "--scaling-tier", sf_dir, tier_out]
         if label == "sf30":
-            env["SPARK_GRAFT_TIER_QUERIES"] = ",".join(SF30_SUBSET)
-        subprocess.run(
-            [sys.executable, self_path, "--scaling-tier", sf_dir, tier_out],
-            check=True,
-            env=env,
-        )
+            cmd += ["--queries", ",".join(SF30_SUBSET)]
+        subprocess.run(cmd, check=True)
         with open(tier_out) as f:
             result[label] = json.load(f)
         os.unlink(tier_out)
@@ -1007,8 +1006,9 @@ def _stream_steady_state(
         # mode's full-state re-emit per batch is machinery no deployment
         # with a keyed sink needs — the r10 A/B measured it at ~0.43
         # s/batch at sf10's window count (1.434 s update vs 1.865 s
-        # complete, .bench/ab_stream_tumbling_sf10_r10.py). The registered
-        # query now runs update mode too, so basis == headline machinery.
+        # complete, .bench/ab_stream_tumbling_sf10_r10.py @ 5678885). The
+        # registered query now runs update mode too, so basis == headline
+        # machinery.
         # Session stays complete: session_window aggregation without a
         # watermark supports complete mode only (update needs a watermark
         # to bound mergeable-session state, which would change the
@@ -1110,18 +1110,213 @@ def _transport_bench(spark, sf_dir: str) -> dict:
     return transport
 
 
+# --- fresh-process A/B (bench.py --ab) ---------------------------------------
+
+
+def _parse_arm(spec: str) -> tuple[str, dict[str, str]]:
+    """``REV[:ENV=VAL[,ENV=VAL]]`` -> (revision, env overrides). The
+    revision ``.`` is the working tree as it is."""
+    rev, _, tail = spec.partition(":")
+    env: dict[str, str] = {}
+    for kv in filter(None, tail.split(",")):
+        k, eq, v = kv.partition("=")
+        if not (k and eq):
+            raise ValueError(f"arm {spec!r}: {kv!r} is not ENV=VAL")
+        env[k] = v
+    return rev or ".", env
+
+
+def ab_mismatches(runs: list[dict]) -> list[str]:
+    """One line per query whose (rows, value hash) differs between runs."""
+    out = []
+    for q in runs[0]["queries"]:
+        seen = {(r["queries"][q]["rows"], r["queries"][q]["hash"]) for r in runs}
+        if len(seen) > 1:
+            out.append(f"{q}: {sorted(seen)}")
+    return out
+
+
+def ab_child_main(tree: str, names: list[str], prefix: str) -> None:
+    """One A/B run in its own process, on the engine of ``tree``. Per
+    query: an untimed collect (row count + value hash; it is also the
+    warm-up), one timed noop-sink force after a cache reset with its
+    task counts, and the forced frame's formatted plan, written to
+    ``<prefix>.<query>.txt``. The run's record goes to ``<prefix>.json``."""
+    # The canonicalizer and plan printer come from this checkout, so both
+    # arms are hashed alike; only then does the arm's engine go first.
+    from scripts.audit_plans import plan_of
+    from scripts.gate_sim import canon_frame, value_hash
+
+    sys.path.insert(0, tree)
+    import lagom_kinesis_spark
+
+    pkg = os.path.realpath(lagom_kinesis_spark.__file__)
+    if not pkg.startswith(os.path.realpath(tree) + os.sep):
+        sys.exit(f"bench --ab: imported {pkg}, not the engine under {tree}")
+    from lagom_kinesis_spark.registry import all_queries
+    from lagom_kinesis_spark.session import get_spark
+
+    qs = all_queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"bench --ab: unknown queries at {tree}: {unknown}")
+    sf_dir = _sf_dir()
+    spark = get_spark("lagom-kinesis-spark-ab")
+    # The bench defaults, unless the arm overrides them.
+    os.environ.setdefault("SPARK_GRAFT_GC_NUDGE", "0")
+    os.environ.setdefault("SPARK_GRAFT_STREAM_UNLOAD", "0")
+    res: dict[str, dict] = {}
+    for name in names:
+        fn = qs[name].fn
+        pdf = fn(spark, sf_dir).toPandas()
+        df, secs, counts = _timed_force(spark, fn, sf_dir, f"ab:{name}")
+        secs = round(secs, 3)
+        plan = f"{prefix}.{name}.txt"
+        with open(plan, "w") as f:
+            f.write(plan_of(df))
+        res[name] = {
+            "rows": len(pdf),
+            "hash": value_hash(canon_frame(pdf)),
+            "seconds": secs,
+            **counts,
+            "plan": plan,
+        }
+        print(f"# {name} @ {sf_dir}: {secs}s ({len(pdf)} rows, "
+              f"{res[name]['hash'][:16]})", file=sys.stderr)
+    with open(f"{prefix}.json", "w") as f:
+        json.dump({"parallelism": spark.sparkContext.defaultParallelism,
+                   "queries": res}, f)
+
+
+def ab_main(
+    specs: list[tuple[str, dict[str, str]]], names: list[str], reps: int, out: str
+) -> int:
+    """Interleaved fresh-process A/B of two arms (see _parse_arm). Each
+    revision is checked out once with ``git worktree add --detach``; pairs
+    run A,B then B,A, alternating; every run is its own ``--ab-child``
+    process. Writes one JSON record to ``out``, and each run's own record
+    and plans under ``<out>.runs/``. Returns 1 if any run's rows or hash
+    differ."""
+    import shutil
+    import statistics
+    import subprocess
+    import tempfile
+
+    root = os.path.dirname(os.path.abspath(__file__))
+
+    def git(cwd: str, *args: str) -> str:
+        return subprocess.run(
+            ["git", "-C", cwd, *args], check=True, capture_output=True, text=True
+        ).stdout.strip()
+
+    arms = dict(zip("AB", specs))
+    # Children run with cwd set to their arm's tree: every path they get
+    # must be absolute.
+    runs_dir = os.path.abspath(os.path.splitext(out)[0] + ".runs")
+    sf_env = {"SPARK_GRAFT_SF_DIR": os.path.abspath(_sf_dir())}
+    os.makedirs(runs_dir, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix="bench-ab-")
+    trees = {".": root}
+    try:
+        for rev, _ in arms.values():
+            if rev not in trees:
+                trees[rev] = os.path.join(tmp, str(len(trees)))
+                git(root, "worktree", "add", "--detach", trees[rev], rev)
+        commits = {rev: git(tree, "rev-parse", "HEAD") for rev, tree in trees.items()}
+        if git(root, "status", "--porcelain"):
+            commits["."] += "+dirty"
+        probe_pre = _contention_probe()
+        runs: list[dict] = []
+        for pair in range(reps):
+            for label in "AB" if pair % 2 == 0 else "BA":
+                rev, env = arms[label]
+                prefix = os.path.join(runs_dir, f"run{len(runs)}{label}")
+                print(f"# ab run {len(runs)}: arm {label}", file=sys.stderr)
+                t0 = time.time()
+                # cwd=tree: the Python workers (python -m pyspark.daemon)
+                # put their cwd first on sys.path, so they import the
+                # arm's engine too.
+                subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--ab-child",
+                     trees[rev], prefix, "--queries", ",".join(names)],
+                    check=True, cwd=trees[rev], env={**os.environ, **sf_env, **env},
+                )
+                with open(f"{prefix}.json") as f:
+                    res = json.load(f)
+                runs.append({"arm": label, "pair": pair,
+                             "wall_s": round(time.time() - t0, 3), **res})
+        probe_post = _contention_probe()
+    finally:
+        for rev, tree in trees.items():
+            if rev != ".":
+                subprocess.run(["git", "-C", root, "worktree", "remove", "--force",
+                                tree], capture_output=True)
+        shutil.rmtree(tmp, ignore_errors=True)
+        subprocess.run(["git", "-C", root, "worktree", "prune"], capture_output=True)
+    mismatches = ab_mismatches(runs)
+    record = {
+        "metric": "ab_wallclock",
+        "unit": "sec",
+        "sf_dir": sf_env["SPARK_GRAFT_SF_DIR"],
+        "queries": names,
+        "reps": reps,
+        "arms": {
+            label: {"rev": rev, "env": env, "commit": commits[rev]}
+            for label, (rev, env) in arms.items()
+        },
+        "runs": runs,
+        "median_s": {
+            label: {
+                q: round(statistics.median(
+                    r["queries"][q]["seconds"] for r in runs if r["arm"] == label
+                ), 3)
+                for q in names
+            }
+            for label in "AB"
+        },
+        "probes": {"pre": probe_pre, "post": probe_post},
+        "mismatches": mismatches,
+    }
+    with open(out, "w") as f:
+        json.dump(record, f, indent=1)
+    print(json.dumps({k: record[k] for k in ("arms", "median_s", "mismatches")}))
+    for line in mismatches:
+        print(f"# OUTPUT MISMATCH {line}", file=sys.stderr)
+    return 1 if mismatches else 0
+
+
 if __name__ == "__main__":
     import argparse
 
-    ap = argparse.ArgumentParser(description=__doc__)
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
     ap.add_argument(
         "--scaling",
         action="store_true",
         help="run the sf0.001/sf0.1/sf1/sf10 ratio-trajectory instead of the headline suite",
     )
-    # default is a LOCAL name: an argless rerun must never clobber a
-    # committed per-round BENCH_SCALING_r{N}.json evidence artifact.
-    ap.add_argument("--out", default="BENCH_SCALING_local.json", help="scaling artifact path")
+    ap.add_argument(
+        "--ab",
+        nargs=2,
+        metavar=("ARM_A", "ARM_B"),
+        type=_parse_arm,
+        help="interleaved fresh-process A/B of two arms, each a git revision "
+        "or '.' (the working tree), optionally REV:ENV=VAL[,ENV=VAL]",
+    )
+    ap.add_argument(
+        "--queries",
+        type=lambda v: [q.strip() for q in v.split(",") if q.strip()],
+        help="comma-separated query names: a headline subset, or the --ab queries",
+    )
+    ap.add_argument("--reps", type=int, default=3, help="--ab pairs of runs (default 3)")
+    # defaults are LOCAL names: an argless rerun must never clobber a
+    # committed per-round evidence artifact.
+    ap.add_argument(
+        "--out",
+        help="artifact path (default BENCH_SCALING_local.json for --scaling, "
+        "AB_local.json for --ab)",
+    )
     ap.add_argument("--skip-sf10", action="store_true", help="trajectory without the sf10 tier")
     ap.add_argument(
         "--scaling-tier",
@@ -1129,10 +1324,24 @@ if __name__ == "__main__":
         metavar=("SF_DIR", "TIER_OUT"),
         help="internal: run one isolated trajectory tier (spawned by --scaling)",
     )
+    ap.add_argument(
+        "--ab-child",
+        nargs=2,
+        metavar=("TREE", "PREFIX"),
+        help="internal: run one A/B run on TREE's engine (spawned by --ab)",
+    )
     a = ap.parse_args()
-    if a.scaling_tier:
-        scaling_tier_main(a.scaling_tier[0], a.scaling_tier[1])
+    if a.ab_child:
+        ab_child_main(a.ab_child[0], a.queries, a.ab_child[1])
+    elif a.scaling_tier:
+        scaling_tier_main(a.scaling_tier[0], a.scaling_tier[1], a.queries)
+    elif a.ab:
+        if not a.queries or a.reps < 1:
+            ap.error("--ab needs --queries and --reps >= 1")
+        sys.exit(ab_main(a.ab, a.queries, a.reps, a.out or "AB_local.json"))
     elif a.scaling:
-        scaling_main(a.out, skip_sf10=a.skip_sf10)
+        if a.queries:
+            ap.error("--queries does not apply to --scaling")
+        scaling_main(a.out or "BENCH_SCALING_local.json", skip_sf10=a.skip_sf10)
     else:
-        main()
+        main(a.queries or HEADLINE)

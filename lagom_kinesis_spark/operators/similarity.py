@@ -322,7 +322,7 @@ def lsh_candidate_pairs(
     # parquet scan underneath, so the planner can pick a broadcast for this
     # self-join and OOM building a corpus-sized hash relation — the same
     # static-estimate trap measured on the verify join at sf10
-    # (.bench/ab_lsh_cc_scale_r12.py, r12). Big⋈big shuffles, always.
+    # (.bench/ab_lsh_cc_scale_r12.json, r12). Big⋈big shuffles, always.
     return (
         a.join(b_.hint("merge"), "bucket")
         .filter(F.col("id_a") < F.col("id_b"))

@@ -156,7 +156,7 @@ def agg_count_distinct_multi_bitmap(spark: SparkSession, sf_dir: str) -> DataFra
     per-bucket row counts (o_custkey non-null by fixture contract).
     Exact by construction — a set representation, not a sketch.
 
-    The trade, measured honestly at sf10 (.bench/ab_bitmap_twin_r9.py):
+    The trade, measured honestly at sf10 (.bench/ab_bitmap_twin_r9.py @ 5678885):
     END-TO-END on local[32] the expand surface is FASTER (0.79 s vs
     1.12 s) — this box's shuffle is memory-speed, so expand's cheap
     codegen'd pair-dedup beats the per-row bitmap expression work. What

@@ -200,7 +200,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bytes (avg 3-gram shingle ≈25 framed bytes vs 8/int64). Verify
     # layer measured 1.389 s → 0.390 s at sf1 (250.6k pairs), pair set +
     # jac values bit-identical (exceptAll both ways = 0; oracle hashes
-    # unchanged — .bench/ab_verify_hash_r12.py). Injectivity contract,
+    # unchanged — .bench/ab_verify_hash_r12.json). Injectivity contract,
     # collision math and the seed-bump escape hatch live on the shared
     # helper (operators/text.shingle_hash_proxy). The SIGNATURE path
     # stays on strings — its hash family determines the candidate set
@@ -212,7 +212,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame's pre-materialization stats come from the tiny compressed
     # parquet scan, so Catalyst would pick BroadcastHashJoin and try to
     # build the exploded shingle arrays (~1 GB at sf10 — measured OOM of
-    # the broadcast exchange, .bench/ab_lsh_cc_scale_r12.py r12) on one
+    # the broadcast exchange, .bench/ab_lsh_cc_scale_r12.json r12) on one
     # executor. Big⋈big must shuffle.
     return (
         cands.join(a.hint("merge"), "id_a")
@@ -1374,7 +1374,7 @@ def lsh_verified_pairs(sub: DataFrame, threshold: float) -> DataFrame:
     # xxhash64'd verify payloads — same narrower-types cut as
     # dedup_minhash_lsh (jaccard reads set sizes only, invariant under an
     # injective map; measured −72% verify-layer at sf1, outputs
-    # bit-identical — .bench/ab_verify_hash_r12.py; contract + escape
+    # bit-identical — .bench/ab_verify_hash_r12.json; contract + escape
     # hatch: operators/text.shingle_hash_proxy).
     hsh = shingle_hash_proxy(F.col("sh"))
     a = sub.select(F.col("doc_id").alias("id_a"), hsh.alias("sh_a"))
@@ -1587,7 +1587,7 @@ def pipeline_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(doc_id) aggregate re-joined to the scored stream: the self-join
     form evaluates the scoring pipeline (tokenize + array_distinct +
     language markers) TWICE — measured 13.9 s vs 8.7 s at sf10
-    (BENCH_NOTES.md round-7; .bench/ab_corpus_filter_window.py)."""
+    (BENCH_NOTES.md round-7; .bench/ab_corpus_filter_window.py @ 5678885)."""
 
     # fan_out: the scoring map (tokenize + array_distinct + markers) is
     # CPU-bound and the compressed source yields 2 splits at sf10.
@@ -1756,7 +1756,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab agg, probe/index joins and the collect_list re-sort shuffle
     # 8-byte longs instead of ~25-byte strings, and the verify arrays
     # shrink the same way (−72% verify-layer measured on the LSH twin,
-    # .bench/ab_verify_hash_r12.py). Output invariant: prefix-filter
+    # .bench/ab_verify_hash_r12.json). Output invariant: prefix-filter
     # pruning is lossless for ANY total order applied consistently (the
     # proof needs only a common order + the prefix length bound; rare-first
     # is the performance heuristic and frequencies are hash-invariant —

@@ -335,7 +335,7 @@ class Subscriber:
             e.startswith("__epoch=") for e in os.listdir(staging_dir)
         ):
             # Nothing staged (already caught up), or every staged epoch was
-            # already processed AND GC'd — only _DONE_ markers remain.
+            # already processed AND GC'd — only the _DONE marker remains.
             return errors
         try:
             import json
@@ -368,18 +368,6 @@ class Subscriber:
                     rec = json.load(f)
                 if rec.get("checkpoint") == ckpt_id:
                     watermark = rec["watermark"]
-            else:
-                # Migrate legacy per-epoch _DONE_<n> markers (they carried
-                # no identity, gating by existence alone — preserve that
-                # for dirs written before the watermark scheme).
-                legacy = [
-                    e for e in os.listdir(staging_dir) if e.startswith("_DONE_")
-                ]
-                if legacy:
-                    watermark = max(int(e.rsplit("_", 1)[1]) for e in legacy)
-                    save(watermark)
-                    for e in legacy:
-                        os.remove(os.path.join(staging_dir, e))
 
             staged = spark.read.parquet(staging_dir)
             done: list[int] = []

@@ -360,6 +360,9 @@ def test_aqe_skew_split_applies_to_shuffled_hash_join(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
+        # Pinned so the skew split does not depend on the core count: at
+        # 2 shuffle partitions the hot key has no median to be skewed from.
+        "spark.sql.shuffle.partitions": "8",
     }
     with scoped_confs(spark, confs):
         # 200k rows on ONE hot key vs a uniform build side.
@@ -540,7 +543,7 @@ def test_tfidf_single_bounded_nlj(spark):
 # --- r13 (VERDICT r12 ask #6): pin the broadcast findings the sf10 audit
 # excused, so none can silently regrow into the cached-corpus OOM trap -----
 
-#: The r12 sf10 broadcast audit (.bench/audit_broadcast_sf10_r12.py;
+#: The r12 sf10 broadcast audit (.bench/audit_broadcast_sf10_r12.py @ 5678885;
 #: BENCH_NOTES "sf10 broadcast audit") flagged 17 BroadcastExchange-over-
 #: fact findings, fixed 4 (minhash/simhash/semdedup/prefix — merge hints)
 #: and EXCUSED the rest with per-class reasons. These are the excused
