@@ -271,8 +271,9 @@ def _time_duck(qs, names, sf_dir: str) -> dict[str, float]:
 
 def _burn_unit(n: int = 1_000_000) -> float:
     """One calibrated CPU burn unit (n chained md5 digests) — the worker
-    for _contention_probe. Self-timed so pool spawn/teardown never lands
-    inside the measurement. Top-level for multiprocessing pickling."""
+    for _contention_probe's parallel phase. Self-timed so pool
+    spawn/teardown never lands inside the measurement. Top-level for
+    multiprocessing pickling."""
     import hashlib
     import time as _t
 
@@ -281,6 +282,24 @@ def _burn_unit(n: int = 1_000_000) -> float:
     for _ in range(n):
         h = hashlib.md5(h).digest()
     return _t.time() - t0
+
+
+def _single_unit_s(n: int = 1_000_000) -> float:
+    """The single-thread clock: best of two in-process burn units. The one
+    reading both _contention_probe and _thermal_gate compare against the
+    clean reference, so the gate cools on the clock the probe flags."""
+    return min(_burn_unit(n) for _ in range(2))
+
+
+def _burn_ref_s() -> float:
+    """The clean-window single-unit reference, overridable for other
+    hardware via SPARK_GRAFT_BURN_REF_S. A malformed override falls back
+    to the calibrated default: diagnostics must neither kill a run nor be
+    silently disabled by it."""
+    try:
+        return float(os.environ.get("SPARK_GRAFT_BURN_REF_S", "0.51"))
+    except ValueError:
+        return 0.51
 
 
 def _contention_probe(n_hashes: int = 1_000_000) -> dict:
@@ -297,7 +316,8 @@ def _contention_probe(n_hashes: int = 1_000_000) -> dict:
 
     Returns {} on any failure (non-Linux, fork unavailable) — the bench
     must never die for its own diagnostics. Fields:
-    - single_unit_s: one burn unit, one process (clock-speed reference).
+    - single_unit_s: _single_unit_s, the in-process single-thread clock
+      that _thermal_gate also reads (clock-speed reference).
     - parallel_unit_max_s: slowest of ncpu simultaneous units — under
       steal every unit stretches; under SMT/turbo it stretches a fixed,
       machine-characteristic amount.
@@ -340,11 +360,7 @@ def _contention_probe(n_hashes: int = 1_000_000) -> dict:
         # the bench inside its own diagnostics — try/except can't catch a
         # hang (ADVICE r10). On timeout the `with` __exit__ terminates the
         # pool and the TimeoutError lands in the outer except → {}.
-        with ctx.Pool(1) as pool:
-            t_single = min(
-                pool.apply_async(_burn_unit, (n_hashes,)).get(timeout=60)
-                for _ in range(2)
-            )
+        t_single = _single_unit_s(n_hashes)
         a = steal_snap()
         with ctx.Pool(ncpu) as pool:
             units = pool.map_async(_burn_unit, [n_hashes] * ncpu).get(
@@ -356,14 +372,7 @@ def _contention_probe(n_hashes: int = 1_000_000) -> dict:
         steal_pct = None
         if a is not None and b is not None and b[0] > a[0]:
             steal_pct = round(100.0 * (b[1] - a[1]) / (b[0] - a[0]), 2)
-        # Same degrade rule as _thermal_gate: a malformed env override must
-        # fall back to the calibrated default, not silently disable the
-        # probe by tripping the broad diagnostics-never-kill-runs except
-        # below (ADVICE r11).
-        try:
-            ref = float(os.environ.get("SPARK_GRAFT_BURN_REF_S", "0.51"))
-        except ValueError:
-            ref = 0.51
+        ref = _burn_ref_s()
         out = {
             "ncpu": ncpu,
             "single_unit_s": round(t_single, 3),
@@ -459,16 +468,10 @@ def _thermal_gate(max_wait_s: float = 420.0) -> None:
     drops under the contended threshold (1.25× ref) or the bounded wait
     expires (the tier's own pre/post probes still record whatever state
     remains — the gate reduces taint, the probes still detect it)."""
-    try:
-        # diagnostics must never kill the run: a malformed env override
-        # falls back to the calibrated default instead of raising between
-        # tiers of a multi-hour scaling run (review r11).
-        ref = float(os.environ.get("SPARK_GRAFT_BURN_REF_S", "0.51"))
-    except ValueError:
-        ref = 0.51
+    ref = _burn_ref_s()
     waited = 0.0
     while True:
-        t = min(_burn_unit() for _ in range(2))
+        t = _single_unit_s()
         if t <= 1.25 * ref or waited >= max_wait_s:
             # bound checked BEFORE sleeping: max_wait_s=0 means one probe
             # and out, and the default never overshoots by a sleep cycle

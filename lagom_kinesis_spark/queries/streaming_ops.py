@@ -2090,10 +2090,11 @@ def kinesis_sim_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish every document as a (json, partition_key=lang) record via the
     KPL-analogue ``put_records``, scan it back with
     ``format("kinesis_sim")`` (one input partition per shard — the KCL
-    lease model), decode, and aggregate. The oracle recomputes the
-    md5-ring shard routing in SQL, so the check covers payload fidelity
-    AND the same-key→same-shard contract. Harness-scale publish happens
-    driver-side; production publishing is the distributed TaggedProducer."""
+    lease model), decode, and aggregate. The oracle counts one shard per
+    key (any deterministic router does), so the check covers payload
+    fidelity AND the same-key→same-shard contract. Harness-scale publish
+    happens driver-side; production publishing is the distributed
+    TaggedProducer."""
     import json as _json
     import shutil as _shutil
 
@@ -2206,8 +2207,8 @@ def kinesis_sim_produce_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     discipline), then the shard scan reads everything back. Unlike
     `kinesis_sim_roundtrip` (driver-side ``put_records``), every record
     here flows through Spark's DataSourceWriter task/commit machinery.
-    The oracle recomputes the md5-ring routing in SQL, so same-key →
-    same-shard must survive the distributed write."""
+    The oracle counts one shard per key, so same-key → same-shard must
+    survive the distributed write."""
     import shutil as _shutil
 
     from lagom_kinesis_spark.catalog import load
@@ -2301,8 +2302,8 @@ def stream_relay_to_kinesis(spark: SparkSession, sf_dir: str) -> DataFrame:
     subscriber→flow→producer relay `Producer.scala:186-215` runs for
     every topic pair), then scan the produced stream back per shard.
     Epoch-staged writer commits make a replayed batch append-idempotent
-    at the staging level; the oracle recomputes the md5-ring routing, so
-    payload counts AND key→shard placement must survive the relay.
+    at the staging level; the oracle counts one shard per key, so payload
+    counts AND one-shard-per-key placement must survive the relay.
     """
     import shutil as _shutil
 
@@ -2374,7 +2375,7 @@ def kinesis_sim_reshard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     from lagom_kinesis_spark.sources import KinesisSimDataSource
     from lagom_kinesis_spark.sources.kinesis_sim import (
         create_stream,
-        put_records_ranged,
+        put_records,
         split_shard,
     )
 
@@ -2393,9 +2394,9 @@ def kinesis_sim_reshard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     ids = _pq.read_table(path_of(sf_dir, "documents"), columns=["doc_id"])[
         "doc_id"
     ].to_pylist()
-    put_records_ranged(d, [(str(i), str(i)) for i in ids if i % 2 == 0])
+    put_records(d, [(str(i), str(i)) for i in ids if i % 2 == 0])
     split_shard(d, "shard-00000")
-    put_records_ranged(d, [(str(i), str(i)) for i in ids if i % 2 == 1])
+    put_records(d, [(str(i), str(i)) for i in ids if i % 2 == 1])
     rec = spark.read.format("kinesis_sim").option("path", d).load()
     return rec.groupBy("shard_id").agg(F.count("*").alias("n_records"))
 

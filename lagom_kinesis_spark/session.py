@@ -22,6 +22,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+#: The directory that holds this package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Runtime-settable SQL confs every query relies on. Applied idempotently.
 RUNTIME_CONFS: dict[str, str] = {
     # Oracle comparison requires naive-UTC timestamps on both engines
@@ -173,6 +176,10 @@ def get_spark(app_name: str = "lagom-kinesis-spark") -> SparkSession:
         # Console progress bars share lines with a non-tty run's output.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers unpickle UDFs and the kinesis_sim DataSource by
+        # importing this package; give them its root, so they find it also
+        # when only the driver's sys.path names the checkout.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     # Shuffle/spill files on tmpfs when available: a long single-host suite
     # writes map_tasks × reduce_partitions shuffle files PER SHUFFLE (stack

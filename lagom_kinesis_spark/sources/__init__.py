@@ -1,5 +1,4 @@
 from lagom_kinesis_spark.sources.kinesis_sim import (  # noqa: F401
     KinesisSimDataSource,
     put_records,
-    shard_for,
 )

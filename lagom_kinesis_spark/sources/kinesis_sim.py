@@ -11,11 +11,15 @@ Spark's public DataSource V2 Python API:
 - a *stream* is a directory of ``shard-NNNNN/`` subdirs of append-only
   jsonl files; a *record* is ``(data, partition_key, sequence_number,
   shard_id)``;
-- ``put_records`` is the KPL-analogue: routes each record to
-  ``shard_for(partition_key)`` (md5-based, engine-reproducible) and
-  assigns the next per-shard sequence number — same partition key ⇒ same
-  shard ⇒ strictly ordered, exactly Kinesis's guarantee
-  (`Producer.scala:217-250` relies on the same property);
+- every stream carries a ``shards.json`` descriptor: each shard owns a
+  range of the 32-bit md5 hash space, is OPEN or CLOSED, and names its
+  parents. ``put_records`` (the KPL-analogue) and the distributed writer
+  route a record to the OPEN shard whose range contains the hash of its
+  explicit hash key or partition key, and append it at the next per-shard
+  sequence number — same partition key ⇒ same shard ⇒ strictly ordered,
+  exactly Kinesis's guarantee (`Producer.scala:217-250` relies on the same
+  property). A put or write to a path with no descriptor first creates a
+  stream of ``n_shards`` equal ranges;
 - batch read = TRIM_HORIZON full replay, one InputPartition per shard
   (the KCL's lease-per-shard parallelism);
 - stream read exposes per-shard sequence offsets: ``initialOffset`` is
@@ -25,8 +29,9 @@ Spark's public DataSource V2 Python API:
   where it left off.
 
 Scale note: one input partition per shard is exactly Kinesis's
-parallelism model; resharding = more shard dirs. Record files are read
-sequentially per shard — the per-shard order IS the contract.
+parallelism model; resharding (split/merge, below) = more shard dirs.
+Record files are read sequentially per shard — the per-shard order IS the
+contract.
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import uuid
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -51,77 +57,45 @@ SCHEMA = (
 )
 
 
-def shard_for(
-    partition_key: str, n_shards: int, explicit_hash_key: str | None = None
-) -> int:
-    """md5-based shard routing: deterministic, engine-reproducible (the
-    simulator's MD5-of-key stand-in for Kinesis's MD5 hash-key ring).
-
-    ``explicit_hash_key`` overrides the partition key on the hash ring —
-    the reference's ``KinesisOutboundRecord.explicitHashKey``
-    (KinesisOutboundRecord.scala:5-9) / Kinesis PutRecord ExplicitHashKey:
-    the record still CARRIES partition_key, only its placement changes
-    (the producer's tool for spreading a hot key or pinning related keys
-    to one shard)."""
-    key = explicit_hash_key if explicit_hash_key is not None else partition_key
-    # Same 32-bit md5-prefix hash as range routing (hash32, defined with
-    # the ranged-stream helpers below): ONE hash definition for both the
-    # modulo ring and the range ring, so they cannot desync.
-    return hash32(key) % n_shards
-
-
 def _shard_name(i: int) -> str:
     return f"shard-{i:05d}"
 
 
-def _shard_file(stream_dir: str, i: int) -> str:
-    return os.path.join(stream_dir, _shard_name(i), "records.jsonl")
+def _records_path(stream_dir: str, shard: str) -> str:
+    return os.path.join(stream_dir, shard, "records.jsonl")
+
+
+def _record_line(data: str, pk: str, ehk: str | None) -> str:
+    payload = {"data": data, "partition_key": pk}
+    if ehk is not None:
+        payload["explicit_hash_key"] = ehk
+    return json.dumps(payload)
 
 
 def put_records(
     stream_dir: str, records: list[tuple], n_shards: int = 4
 ) -> dict[str, int]:
     """Append (data, partition_key[, explicit_hash_key]) records — the
-    KPL-analogue producer. An explicit hash key overrides ring placement
-    (shard_for). Returns the per-shard tip (record count) after the put.
-
-    Descriptor-aware, mirroring _Writer's guard: a ranged stream
-    (shards.json present) routes by hash RANGE over the OPEN shards —
-    trusting the caller's ``n_shards`` there would mod-route records into
-    CLOSED parents a drain-parents-first consumer already finished. On a
-    plain stream, a put whose ``n_shards`` disagrees with the existing
-    shard ring is rejected: the same partition key would re-route to a
-    different shard, splitting one key's records across shards and
-    silently breaking the module's per-key ordering contract."""
-    if os.path.exists(os.path.join(stream_dir, _META)):
-        return put_records_ranged(stream_dir, records)
-    existing = _shards_of(stream_dir)
-    if existing and len(existing) != n_shards:
-        raise ValueError(
-            f"put_records(n_shards={n_shards}) against a stream with "
-            f"{len(existing)} existing shards would re-route partition "
-            "keys; pass the stream's actual shard count"
-        )
-    buckets: dict[int, list[str]] = {}
+    KPL-analogue producer. Each record goes to the OPEN shard whose hash
+    range contains hash32(explicit_hash_key or partition_key); the explicit
+    key changes placement only, the record still carries its partition key
+    (Kinesis PutRecord ExplicitHashKey, KinesisOutboundRecord.scala:5-9).
+    ``n_shards`` sizes a new stream only: routing reads the descriptor, so a
+    later put cannot move a key to another shard. Returns every shard's tip
+    (record count) after the put."""
+    shards = _open_shards(stream_dir, n_shards)
+    buckets: dict[str, list[str]] = {}
     for rec in records:
-        data, pk = rec[0], rec[1]
         ehk = rec[2] if len(rec) > 2 else None
-        payload = {"data": data, "partition_key": pk}
-        if ehk is not None:
-            payload["explicit_hash_key"] = ehk
-        buckets.setdefault(shard_for(pk, n_shards, ehk), []).append(
-            json.dumps(payload)
-        )
-    tips: dict[str, int] = {}
-    for i in range(n_shards):
-        path = _shard_file(stream_dir, i)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        lines = buckets.get(i, [])
-        if lines:
-            with open(path, "a") as f:
-                f.write("\n".join(lines) + "\n")
-        tips[_shard_name(i)] = _count_records(path)
-    return tips
+        sid = covering_open_shard(shards, rec[1], ehk)["id"]
+        buckets.setdefault(sid, []).append(_record_line(rec[0], rec[1], ehk))
+    for sid, lines in buckets.items():
+        with open(_records_path(stream_dir, sid), "a") as f:
+            f.write("\n".join(lines) + "\n")
+    return {
+        s: _count_records(_records_path(stream_dir, s))
+        for s in _shards_of(stream_dir)
+    }
 
 
 def _count_records(path: str) -> int:
@@ -141,7 +115,7 @@ def _read_shard(
     stream_dir: str, shard: str, start: int, end: int | None
 ) -> Iterator[tuple]:
     """Rows of one shard with sequence numbers in [start, end)."""
-    path = os.path.join(stream_dir, shard, "records.jsonl")
+    path = _records_path(stream_dir, shard)
     if not os.path.exists(path):
         return
     with open(path) as f:
@@ -242,15 +216,9 @@ class _StreamReader(DataSourceStreamReader):
 
     def _tips(self) -> dict[str, int]:
         return {
-            s: _count_records(os.path.join(self.stream_dir, s, "records.jsonl"))
+            s: _count_records(_records_path(self.stream_dir, s))
             for s in _shards_of(self.stream_dir)
         }
-
-    def _lineage(self) -> dict[str, list[str]]:
-        try:
-            return {s["id"]: s["parents"] for s in _load_meta(self.stream_dir)}
-        except (FileNotFoundError, KeyError, json.JSONDecodeError):
-            return {}  # never resharded → no lineage to honor
 
     def initialOffset(self) -> dict:
         if self.starting == "LATEST":
@@ -276,7 +244,8 @@ class _StreamReader(DataSourceStreamReader):
             # its floor is already seeded by the partitions() re-plan.
             self._floor_scheduled(tips)
             return tips
-        lineage = self._lineage()
+        # A shard dir exists only after its stream's descriptor does.
+        lineage = shard_lineage(self.stream_dir) if tips else {}
         out: dict[str, int] = {}
         for shard, tip in tips.items():
             undrained = [
@@ -319,10 +288,10 @@ class _StreamReader(DataSourceStreamReader):
 
 
 class _StagedParts(WriterCommitMessage):
-    """Commit message: the shard parts one task staged (shard index,
-    staged file path, record count)."""
+    """Commit message: the shard parts one task staged (shard id, staged
+    file path, record count)."""
 
-    def __init__(self, parts: list[tuple[int, str, int]]):
+    def __init__(self, parts: list[tuple[str, str, int]]):
         self.parts = parts
 
 
@@ -331,8 +300,9 @@ class _Writer(DataSourceWriter):
     (`Producer.scala:217-250`) as a transactional Spark sink.
 
     Two-phase protocol (the standard exactly-once sink shape): each TASK
-    buckets its rows by ``shard_for(partition_key)`` and writes one
-    staged part file per shard (executor-side, parallel, no contention);
+    buckets its rows by the OPEN shard whose hash range covers the key
+    (the same routing as ``put_records``) and writes one staged part file
+    per shard (executor-side, parallel, no contention);
     the driver's ``commit()`` then appends all staged parts to the
     per-shard logs in one deterministic sorted order. A failed/retried
     task stages to a fresh uuid path and only the committed attempt's
@@ -344,30 +314,12 @@ class _Writer(DataSourceWriter):
 
     def __init__(self, options, overwrite: bool):
         self.stream_dir = options["path"]
-        self.n_shards = int(options.get("n_shards", "4"))
         self.overwrite = overwrite
-        # A ranged stream (shards.json present — create_stream/split/merge
-        # model) routes by hash RANGE over the OPEN shards, exactly like
-        # put_records_ranged. Without this, writing to a resharded stream
-        # would mod-route records into CLOSED parents (breaking the
-        # drain-parents-first ordering contract) and into shard indices
-        # outside the descriptor entirely.
-        meta = os.path.join(self.stream_dir, _META)
-        self.open_ranges: list[dict] | None = None
-        if os.path.exists(meta):
-            self.open_ranges = [
-                s for s in _load_meta(self.stream_dir) if s["status"] == "OPEN"
-            ]
-
-    def _route(self, pk: str, ehk) -> int:
-        if self.open_ranges is None:
-            return shard_for(pk, self.n_shards, ehk)
-        s = covering_open_shard(self.open_ranges, pk, ehk)
-        return int(s["id"].rsplit("-", 1)[1])
+        self.open_shards = _open_shards(
+            self.stream_dir, int(options.get("n_shards", "4"))
+        )
 
     def write(self, iterator) -> _StagedParts:
-        import uuid as _uuid
-
         from pyspark import TaskContext
 
         # Partition id leads the staging path so commit()'s path sort is a
@@ -379,27 +331,23 @@ class _Writer(DataSourceWriter):
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         stage_dir = os.path.join(
-            self.stream_dir, "_staging", f"{pid:05d}_{_uuid.uuid4().hex}"
+            self.stream_dir, "_staging", f"{pid:05d}_{uuid.uuid4().hex}"
         )
-        buckets: dict[int, list[str]] = {}
+        buckets: dict[str, list[str]] = {}
         for row in iterator:
             pk = row.partition_key
-            # Optional explicit_hash_key column overrides ring placement
+            # Optional explicit_hash_key column overrides placement
             # (KinesisOutboundRecord.scala:5-9); absent/null → pk routing.
             ehk = getattr(row, "explicit_hash_key", None)
-            payload = {"data": row.data, "partition_key": pk}
-            if ehk is not None:
-                payload["explicit_hash_key"] = ehk
-            buckets.setdefault(self._route(pk, ehk), []).append(
-                json.dumps(payload)
-            )
+            sid = covering_open_shard(self.open_shards, pk, ehk)["id"]
+            buckets.setdefault(sid, []).append(_record_line(row.data, pk, ehk))
         os.makedirs(stage_dir, exist_ok=True)
-        parts: list[tuple[int, str, int]] = []
-        for i, lines in sorted(buckets.items()):
-            p = os.path.join(stage_dir, f"{_shard_name(i)}.part")
+        parts: list[tuple[str, str, int]] = []
+        for sid, lines in sorted(buckets.items()):
+            p = os.path.join(stage_dir, f"{sid}.part")
             with open(p, "w") as f:
                 f.write("\n".join(lines) + "\n")
-            parts.append((i, p, len(lines)))
+            parts.append((sid, p, len(lines)))
         return _StagedParts(parts)
 
     def commit(self, messages) -> None:
@@ -408,6 +356,11 @@ class _Writer(DataSourceWriter):
         if self.overwrite:
             for s in _shards_of(self.stream_dir):
                 shutil.rmtree(os.path.join(self.stream_dir, s), ignore_errors=True)
+        # Materialize every descriptor shard dir before appending: the
+        # overwrite rmtree above deletes OPEN shards and CLOSED parents
+        # alike, and a shard this batch left empty must stay readable.
+        for s in _load_meta(self.stream_dir):
+            os.makedirs(os.path.join(self.stream_dir, s["id"]), exist_ok=True)
         # NOTE on retry semantics: the stage/commit split makes SPECULATIVE
         # and DEAD TASK attempts harmless (their parts are never appended).
         # A driver-side failure mid-append followed by a whole-job retry
@@ -418,27 +371,11 @@ class _Writer(DataSourceWriter):
             (part for m in messages if m is not None for part in m.parts),
             key=lambda x: x[1],
         )
-        for i, path, _n in staged:
-            dst = _shard_file(self.stream_dir, i)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            with open(path) as src, open(dst, "a") as out:
+        for sid, path, _n in staged:
+            with open(path) as src, open(
+                _records_path(self.stream_dir, sid), "a"
+            ) as out:
                 out.write(src.read())
-        # Materialize every shard dir so readers see the full shard ring
-        # even when a shard received no records — mandatory after the
-        # overwrite rmtree above, which deletes record-less OPEN shards
-        # and CLOSED parents alike (create_stream/split/merge materialized
-        # them once, but that does not survive an overwrite).
-        if self.open_ranges is None:
-            for i in range(self.n_shards):
-                os.makedirs(
-                    os.path.dirname(_shard_file(self.stream_dir, i)),
-                    exist_ok=True,
-                )
-        else:
-            for s in _load_meta(self.stream_dir):
-                os.makedirs(
-                    os.path.join(self.stream_dir, s["id"]), exist_ok=True
-                )
         self._sweep_own_staging(messages)
 
     def abort(self, messages) -> None:
@@ -507,15 +444,15 @@ class KinesisSimDataSource(DataSource):
 
 
 # ---------------------------------------------------------------------------
-# Resharding (hash-range shard model)
+# Hash-range shard model and resharding
 #
-# Kinesis proper routes by MD5 hash RANGE, and resharding splits a parent
-# shard's range between two children: the parent is CLOSED (its records
-# remain readable to the end — SHARD_END), and new records route to
-# whichever child's range contains the key hash. Consumers must drain the
-# parent before its children to keep per-key order (the KCL lease rule the
-# reference inherits). The simulator keeps the same record/file layout and
-# adds a `shards.json` descriptor carrying ranges, status and parentage.
+# Kinesis routes by MD5 hash RANGE, and resharding splits a parent shard's
+# range between two children (or merges two adjacent ranges into one): the
+# parent is CLOSED (its records remain readable to the end — SHARD_END),
+# and new records route to whichever OPEN shard's range contains the key
+# hash. Consumers must drain the parent before its children to keep
+# per-key order (the KCL lease rule the reference inherits). Every stream's
+# `shards.json` descriptor carries ranges, status and parentage.
 # Ranges live in the 32-bit prefix space of md5 (granular enough for a
 # simulator, and representable in every engine's BIGINT for oracles).
 # ---------------------------------------------------------------------------
@@ -537,8 +474,8 @@ def hash32(partition_key: str) -> int:
 
 def covering_open_shard(open_shards: list[dict], pk: str, ehk=None) -> dict:
     """The OPEN shard whose hash range contains hash32(ehk or pk) — the
-    single definition of range routing, shared by the producer helper
-    (put_records_ranged) and the distributed writer (_Writer._route)."""
+    single definition of routing, shared by the producer helper
+    (put_records) and the distributed writer (_Writer.write)."""
     h = hash32(ehk if ehk is not None else pk)
     for s in open_shards:
         if s["lo"] <= h < s["hi"]:
@@ -552,13 +489,29 @@ def _load_meta(stream_dir: str) -> list[dict]:
 
 
 def _save_meta(stream_dir: str, shards: list[dict]) -> None:
+    # Atomic: every put and write reads the descriptor, and a reader must
+    # never see a torn one. The tmp name is unique, so two producers
+    # creating one stream at once cannot interleave their bytes.
     os.makedirs(stream_dir, exist_ok=True)
-    with open(os.path.join(stream_dir, _META), "w") as f:
+    path = os.path.join(stream_dir, _META)
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
         json.dump(shards, f, indent=1)
+    os.replace(tmp, path)
+
+
+def _open_shards(stream_dir: str, n_shards: int) -> list[dict]:
+    """The OPEN shards a put or write routes to; a path with no descriptor
+    is first created as a stream of ``n_shards`` equal ranges."""
+    if os.path.exists(os.path.join(stream_dir, _META)):
+        shards = _load_meta(stream_dir)
+    else:
+        shards = create_stream(stream_dir, n_shards)
+    return [s for s in shards if s["status"] == "OPEN"]
 
 
 def create_stream(stream_dir: str, n_shards: int = 1) -> list[dict]:
-    """Initialize a ranged stream: n open shards splitting [0, 2^32)."""
+    """Initialize a stream: n open shards splitting [0, 2^32)."""
     step = _RANGE_SPACE // n_shards
     shards = [
         {
@@ -602,35 +555,6 @@ def split_shard(stream_dir: str, shard_id: str) -> tuple[str, str]:
         next_idx += 1
     _save_meta(stream_dir, shards)
     return children[0], children[1]
-
-
-def put_records_ranged(
-    stream_dir: str, records: list[tuple]
-) -> dict[str, int]:
-    """Route (data, partition_key[, explicit_hash_key]) records to the OPEN
-    shard whose hash range contains hash32(explicit_hash_key or pk) — the
-    post-reshard producer path with the Kinesis ExplicitHashKey override."""
-    shards = [s for s in _load_meta(stream_dir) if s["status"] == "OPEN"]
-    buckets: dict[str, list[str]] = {}
-    for rec in records:
-        data, pk = rec[0], rec[1]
-        ehk = rec[2] if len(rec) > 2 else None
-        target = covering_open_shard(shards, pk, ehk)["id"]
-        payload = {"data": data, "partition_key": pk}
-        if ehk is not None:
-            payload["explicit_hash_key"] = ehk
-        buckets.setdefault(target, []).append(json.dumps(payload))
-    tips: dict[str, int] = {}
-    for sid, lines in buckets.items():
-        path = os.path.join(stream_dir, sid, "records.jsonl")
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "a") as f:
-            f.write("\n".join(lines) + "\n")
-    for s in _load_meta(stream_dir):
-        tips[s["id"]] = _count_records(
-            os.path.join(stream_dir, s["id"], "records.jsonl")
-        )
-    return tips
 
 
 def shard_lineage(stream_dir: str) -> dict[str, list[str]]:

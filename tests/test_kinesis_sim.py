@@ -5,17 +5,40 @@ replay, checkpoint resume (R17), LATEST start position, Topic integration.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import uuid
 
 import pytest
 
-from lagom_kinesis_spark.sources import KinesisSimDataSource, put_records, shard_for
+from lagom_kinesis_spark.sources import KinesisSimDataSource, put_records
+from lagom_kinesis_spark.sources.kinesis_sim import _load_meta, hash32
 
 
 @pytest.fixture()
 def stream_dir(tmp_path):
     return str(tmp_path / "stream")
+
+
+def _shard_records(stream_dir) -> dict[str, list[dict]]:
+    """Shard id → its records in sequence order, read from the files."""
+    out = {}
+    for s in _load_meta(stream_dir):
+        path = os.path.join(stream_dir, s["id"], "records.jsonl")
+        lines = open(path).read().splitlines() if os.path.exists(path) else []
+        out[s["id"]] = [json.loads(ln) for ln in lines if ln.strip()]
+    return out
+
+
+def _assert_in_covering_open_shard(stream_dir, placed) -> None:
+    """Each (shard id, routing key) sits in an OPEN shard whose hash range
+    contains hash32(routing key) — routing key = explicit hash key or pk."""
+    meta = {s["id"]: s for s in _load_meta(stream_dir)}
+    for sid, key in placed:
+        s = meta[sid]
+        assert s["status"] == "OPEN" and s["lo"] <= hash32(key) < s["hi"], (
+            sid, key, s,
+        )
 
 
 def _registered(spark):
@@ -30,9 +53,26 @@ def test_same_partition_key_same_shard_and_ordered(stream_dir):
     tips = put_records(
         stream_dir, [(f"m{i}", f"user{i % 3}") for i in range(30)], n_shards=4
     )
-    assert sum(tips.values()) == 30
-    for pk in ("user0", "user1", "user2"):
-        assert shard_for(pk, 4) == shard_for(pk, 4)
+    assert sum(tips.values()) == 30 and len(tips) == 4
+    placed = _shard_records(stream_dir)
+    for k in range(3):
+        pk = f"user{k}"
+        shards = [sid for sid, recs in placed.items() if any(
+            r["partition_key"] == pk for r in recs
+        )]
+        assert len(shards) == 1, (pk, shards)
+        got = [r["data"] for r in placed[shards[0]] if r["partition_key"] == pk]
+        assert got == [f"m{i}" for i in range(30) if i % 3 == k]
+        _assert_in_covering_open_shard(stream_dir, [(shards[0], pk)])
+
+
+def test_empty_put_creates_the_stream(stream_dir):
+    """A put to a new path creates the descriptor and every shard dir, even
+    when it carries no record (a consumer may start on the empty stream)."""
+    tips = put_records(stream_dir, [], 4)
+    assert tips == {f"shard-{i:05d}": 0 for i in range(4)}
+    assert [s["id"] for s in _load_meta(stream_dir)] == sorted(tips)
+    assert all(os.path.isdir(os.path.join(stream_dir, s)) for s in tips)
 
 
 def test_batch_read_full_replay_per_shard_ordered(spark, stream_dir):
@@ -149,7 +189,8 @@ def _write_df(spark, rows, stream_dir, mode="append", n_shards=4, partitions=Non
 
 def test_distributed_writer_append_and_overwrite(spark, stream_dir):
     """df.write.format('kinesis_sim'): append accumulates, overwrite
-    resets the shard ring; routing matches shard_for on read-back."""
+    resets the shards; each record reads back from the OPEN shard whose
+    hash range contains its key."""
     _registered(spark)
     rows = [(f"m{i}", f"u{i % 5}") for i in range(40)]
     _write_df(spark, rows, stream_dir)
@@ -163,18 +204,18 @@ def test_distributed_writer_append_and_overwrite(spark, stream_dir):
     _write_df(spark, rows[:10], stream_dir, mode="overwrite")
     left = spark.read.format("kinesis_sim").option("path", stream_dir).load()
     assert left.count() == 10
-    for r in left.collect():
-        assert r["shard_id"] == f"shard-{shard_for(r['partition_key'], 4):05d}"
+    _assert_in_covering_open_shard(
+        stream_dir, [(r["shard_id"], r["partition_key"]) for r in left.collect()]
+    )
 
 
 def test_ranged_overwrite_keeps_full_shard_ring(spark, stream_dir):
-    """Overwrite on a RANGED stream (shards.json present) rmtree's every
-    shard dir; the writer must re-materialize the descriptor's dirs, or
-    OPEN shards that happened to receive no records in the overwriting
-    batch vanish from the ring (_shards_of/offsets would disagree with
-    shards.json until some later record recreated the dir)."""
+    """Overwrite on a resharded stream rmtree's every shard dir; the
+    writer must re-materialize the descriptor's dirs, or OPEN shards that
+    happened to receive no records in the overwriting batch vanish
+    (_shards_of/offsets would disagree with shards.json until some later
+    record recreated the dir)."""
     from lagom_kinesis_spark.sources.kinesis_sim import (
-        _load_meta,
         _shards_of,
         create_stream,
         split_shard,
@@ -216,19 +257,16 @@ def test_split_shard_routing_and_order(spark, stream_dir):
     the range halves, post-split records route by containment, and a hot
     key's records stay ordered parent-before-child."""
     from lagom_kinesis_spark.sources.kinesis_sim import (
-        _load_meta,
         create_stream,
-        hash32,
-        put_records_ranged,
         shard_lineage,
         split_shard,
     )
 
     _registered(spark)
     create_stream(stream_dir, n_shards=1)
-    put_records_ranged(stream_dir, [(f"pre{i}", f"k{i % 7}") for i in range(21)])
+    put_records(stream_dir, [(f"pre{i}", f"k{i % 7}") for i in range(21)])
     left, right = split_shard(stream_dir, "shard-00000")
-    put_records_ranged(stream_dir, [(f"post{i}", f"k{i % 7}") for i in range(21)])
+    put_records(stream_dir, [(f"post{i}", f"k{i % 7}") for i in range(21)])
 
     meta = {s["id"]: s for s in _load_meta(stream_dir)}
     assert meta["shard-00000"]["status"] == "CLOSED"
@@ -270,14 +308,13 @@ def test_stream_reader_discovers_children_after_split(spark, stream_dir, tmp_pat
     start at TRIM_HORIZON)."""
     from lagom_kinesis_spark.sources.kinesis_sim import (
         create_stream,
-        put_records_ranged,
         split_shard,
     )
 
     _registered(spark)
     ck = str(tmp_path / "ck_reshard")
     create_stream(stream_dir, n_shards=1)
-    put_records_ranged(stream_dir, [(f"pre{i}", f"k{i}") for i in range(10)])
+    put_records(stream_dir, [(f"pre{i}", f"k{i}") for i in range(10)])
 
     def run():
         got: list = []
@@ -298,7 +335,7 @@ def test_stream_reader_discovers_children_after_split(spark, stream_dir, tmp_pat
     assert len(first) == 10 and all(r["shard_id"] == "shard-00000" for r in first)
 
     split_shard(stream_dir, "shard-00000")
-    put_records_ranged(stream_dir, [(f"post{i}", f"k{i}") for i in range(10)])
+    put_records(stream_dir, [(f"post{i}", f"k{i}") for i in range(10)])
     second = run()
     assert len(second) == 10  # only the new records — no parent replay
     assert all(r["data"].startswith("post") for r in second)
@@ -309,17 +346,15 @@ def test_merge_shards_combines_ranges(spark, stream_dir):
     """MergeShards: both parents close, the child owns the union range and
     receives all subsequent traffic; parents stay readable."""
     from lagom_kinesis_spark.sources.kinesis_sim import (
-        _load_meta,
         create_stream,
         merge_shards,
-        put_records_ranged,
     )
 
     _registered(spark)
     create_stream(stream_dir, n_shards=2)
-    put_records_ranged(stream_dir, [(f"pre{i}", f"k{i}") for i in range(12)])
+    put_records(stream_dir, [(f"pre{i}", f"k{i}") for i in range(12)])
     child = merge_shards(stream_dir, "shard-00000", "shard-00001")
-    put_records_ranged(stream_dir, [(f"post{i}", f"k{i}") for i in range(12)])
+    put_records(stream_dir, [(f"post{i}", f"k{i}") for i in range(12)])
     meta = {s["id"]: s for s in _load_meta(stream_dir)}
     assert meta[child]["lo"] == 0 and meta[child]["hi"] == 1 << 32
     assert meta[child]["parents"] == ["shard-00000", "shard-00001"]
@@ -335,8 +370,6 @@ def test_merge_shards_combines_ranges(spark, stream_dir):
 def test_writer_abort_sweeps_staging(spark, stream_dir):
     """An aborted distributed write publishes nothing: staged parts are
     swept, the stream is unchanged."""
-    import os
-
     from pyspark.sql import Row
 
     from lagom_kinesis_spark.sources.kinesis_sim import _Writer
@@ -357,55 +390,55 @@ def test_explicit_hash_key_overrides_routing(spark, stream_dir):
     """Kinesis ExplicitHashKey semantics (KinesisOutboundRecord.scala:5-9):
     a record routes by hash(explicit_hash_key or partition_key) while still
     CARRYING its partition key — the producer's tool for spreading a hot
-    key across shards. Covers put_records, the distributed writer, and
-    put_records_ranged."""
+    key across shards. Covers put_records, the distributed writer, and a
+    put after a split."""
     from pyspark.sql import Row
 
-    from lagom_kinesis_spark.sources.kinesis_sim import (
-        create_stream,
-        hash32,
-        put_records,
-        put_records_ranged,
-        shard_for,
-    )
+    from lagom_kinesis_spark.sources.kinesis_sim import split_shard
 
     _registered(spark)
-    n = 4
+
+    def ehk_of(data):  # m<i> was published with explicit key spread<i % 8>
+        return f"spread{int(data[1:]) % 8}"
+
     # One hot partition key, spread over 8 distinct explicit hash keys.
-    recs = [(f"m{i}", "hotkey", f"spread{i % 8}") for i in range(40)]
-    put_records(stream_dir, recs, n_shards=n)
+    recs = [(f"m{i}", "hotkey", ehk_of(f"m{i}")) for i in range(40)]
+    put_records(stream_dir, recs, n_shards=4)
     rows = (
         spark.read.format("kinesis_sim").option("path", stream_dir).load().collect()
     )
     assert len(rows) == 40 and all(r["partition_key"] == "hotkey" for r in rows)
-    # Placement follows the explicit key's ring position, not the pk's.
-    shards_hit = {r["shard_id"] for r in rows}
-    expected = {f"shard-{shard_for('hotkey', n, f'spread{i}'):05d}" for i in range(8)}
-    assert shards_hit == expected and len(shards_hit) > 1
+    # Placement follows the explicit key's hash range, not the pk's.
+    placed = {r["data"]: r["shard_id"] for r in rows}
+    _assert_in_covering_open_shard(
+        stream_dir, [(sid, ehk_of(d)) for d, sid in placed.items()]
+    )
+    assert len(set(placed.values())) > 1
 
     # Distributed writer honors an explicit_hash_key column the same way.
     wdir = stream_dir + "_w"
     df = spark.createDataFrame(
-        [Row(data=f"m{i}", partition_key="hotkey", explicit_hash_key=f"spread{i % 8}") for i in range(40)]
+        [Row(data=d, partition_key=pk, explicit_hash_key=ehk) for d, pk, ehk in recs]
     )
     df.write.format("kinesis_sim").option("path", wdir).option(
-        "n_shards", str(n)
+        "n_shards", "4"
     ).mode("append").save()
     wrows = spark.read.format("kinesis_sim").option("path", wdir).load().collect()
-    assert {r["shard_id"] for r in wrows} == expected
+    assert {r["data"]: r["shard_id"] for r in wrows} == placed
 
-    # Ranged (post-reshard) routing: containment of hash32(ehk), not pk.
-    rdir = stream_dir + "_r"
-    create_stream(rdir, n_shards=2)
-    put_records_ranged(rdir, [("a", "hotkey", "spread0"), ("b", "hotkey", "spread3")])
-    from lagom_kinesis_spark.sources.kinesis_sim import _load_meta
-
-    meta = {s["id"]: s for s in _load_meta(rdir)}
-    rrows = spark.read.format("kinesis_sim").option("path", rdir).load().collect()
-    for r in rrows:
-        ehk = "spread0" if r["data"] == "a" else "spread3"
-        s = meta[r["shard_id"]]
-        assert s["lo"] <= hash32(ehk) < s["hi"]
+    # After a split: containment of hash32(ehk) among the OPEN shards.
+    split_shard(stream_dir, placed["m0"])
+    put_records(stream_dir, [("a", "hotkey", "spread0"), ("b", "hotkey", "spread3")])
+    after = _shard_records(stream_dir)
+    _assert_in_covering_open_shard(
+        stream_dir,
+        [
+            (sid, "spread0" if r["data"] == "a" else "spread3")
+            for sid, rs in after.items()
+            for r in rs
+            if r["data"] in ("a", "b")
+        ],
+    )
 
 
 def test_stream_reader_drains_parent_before_child(spark, stream_dir, tmp_path):
@@ -414,15 +447,14 @@ def test_stream_reader_drains_parent_before_child(spark, stream_dir, tmp_path):
     has been committed — so per-key order survives a reshard consume."""
     from lagom_kinesis_spark.sources.kinesis_sim import (
         create_stream,
-        put_records_ranged,
         split_shard,
     )
 
     _registered(spark)
     create_stream(stream_dir, n_shards=1)
-    put_records_ranged(stream_dir, [(f"pre{i}", f"k{i % 5}") for i in range(15)])
+    put_records(stream_dir, [(f"pre{i}", f"k{i % 5}") for i in range(15)])
     left, right = split_shard(stream_dir, "shard-00000")
-    put_records_ranged(stream_dir, [(f"post{i}", f"k{i % 5}") for i in range(15)])
+    put_records(stream_dir, [(f"post{i}", f"k{i % 5}") for i in range(15)])
 
     batches: list[tuple[int, list]] = []
     q = (
@@ -473,15 +505,14 @@ def test_drain_gate_never_regresses_after_restart(stream_dir):
     from lagom_kinesis_spark.sources.kinesis_sim import (
         _StreamReader,
         create_stream,
-        put_records_ranged,
         split_shard,
     )
 
     opts = {"path": stream_dir, "drain_parents_first": "true"}
     create_stream(stream_dir, n_shards=1)
-    put_records_ranged(stream_dir, [(f"pre{i}", f"k{i % 3}") for i in range(9)])
+    put_records(stream_dir, [(f"pre{i}", f"k{i % 3}") for i in range(9)])
     left, right = split_shard(stream_dir, "shard-00000")
-    put_records_ranged(stream_dir, [(f"post{i}", f"k{i % 3}") for i in range(9)])
+    put_records(stream_dir, [(f"post{i}", f"k{i % 3}") for i in range(9)])
 
     # Run 1 (fresh): batch 1 schedules the parent, holds children; batch 2
     # releases the children once the parent is drained.
@@ -522,14 +553,13 @@ def test_drain_gate_latest_start_does_not_regress(stream_dir):
     from lagom_kinesis_spark.sources.kinesis_sim import (
         _StreamReader,
         create_stream,
-        put_records_ranged,
         split_shard,
     )
 
     create_stream(stream_dir, n_shards=1)
-    put_records_ranged(stream_dir, [(f"pre{i}", f"k{i % 3}") for i in range(6)])
+    put_records(stream_dir, [(f"pre{i}", f"k{i % 3}") for i in range(6)])
     left, right = split_shard(stream_dir, "shard-00000")
-    put_records_ranged(stream_dir, [(f"post{i}", f"k{i % 3}") for i in range(6)])
+    put_records(stream_dir, [(f"post{i}", f"k{i % 3}") for i in range(6)])
 
     r = _StreamReader(
         {"path": stream_dir, "drain_parents_first": "true", "startingposition": "LATEST"}
@@ -547,15 +577,14 @@ def test_stream_restart_with_drain_gate_no_duplicates(spark, stream_dir, tmp_pat
     exactly once (no re-delivery from a regressed end offset)."""
     from lagom_kinesis_spark.sources.kinesis_sim import (
         create_stream,
-        put_records_ranged,
         split_shard,
     )
 
     _registered(spark)
     create_stream(stream_dir, n_shards=1)
-    put_records_ranged(stream_dir, [(f"pre{i}", f"k{i % 3}") for i in range(9)])
+    put_records(stream_dir, [(f"pre{i}", f"k{i % 3}") for i in range(9)])
     left, right = split_shard(stream_dir, "shard-00000")
-    put_records_ranged(stream_dir, [(f"post{i}", f"k{i % 3}") for i in range(9)])
+    put_records(stream_dir, [(f"post{i}", f"k{i % 3}") for i in range(9)])
 
     seen: list = []
 
@@ -576,24 +605,19 @@ def test_stream_restart_with_drain_gate_no_duplicates(spark, stream_dir, tmp_pat
 
     run_once()
     assert len(seen) == 18
-    put_records_ranged(stream_dir, [(f"late{i}", f"k{i % 3}") for i in range(6)])
+    put_records(stream_dir, [(f"late{i}", f"k{i % 3}") for i in range(6)])
     run_once()
     datas = [r["data"] for r in seen]
     assert len(datas) == 24 and len(set(datas)) == 24  # exactly once each
 
 
 def test_distributed_writer_routes_by_ranges_after_reshard(spark, stream_dir):
-    """df.write on a RANGED stream (shards.json present) must route like
-    put_records_ranged: records land only in OPEN shards whose hash range
-    contains hash32(pk) — never in the CLOSED parent (which a
-    drain-parents-first consumer has already drained) and never in mod-N
-    shard indices outside the descriptor."""
-    import os
-
+    """df.write on a resharded stream routes like put_records: records land
+    only in OPEN shards whose hash range contains hash32(pk) — never in the
+    CLOSED parent (which a drain-parents-first consumer has already
+    drained) and never in shard ids outside the descriptor."""
     from lagom_kinesis_spark.sources.kinesis_sim import (
-        _load_meta,
         create_stream,
-        hash32,
         split_shard,
     )
 
@@ -666,7 +690,6 @@ def test_reshard_ring_invariants_under_random_split_merge(tmp_path):
 
     from lagom_kinesis_spark.sources.kinesis_sim import (
         _RANGE_SPACE,
-        _load_meta,
         _shards_of,
         create_stream,
         merge_shards,
@@ -731,26 +754,26 @@ def test_unknown_starting_position_rejected(spark, stream_dir, tmp_path):
         q.stop()
 
 
-def test_put_records_rejects_shard_count_mismatch(tmp_path):
-    """A put whose n_shards disagrees with the existing ring would re-route
-    partition keys mid-stream, splitting one key's records across shards —
-    the module's core per-key ordering contract. Rejected loudly."""
+def test_later_put_with_other_n_shards_keeps_each_key_on_its_shard(tmp_path):
+    """n_shards only sizes a new stream: a later put that passes another
+    count still routes by the descriptor, so no key moves to a second
+    shard and the stream keeps its shards."""
     d = str(tmp_path / "plain")
-    put_records(d, [("a", "k1"), ("b", "k2")], n_shards=4)
-    with pytest.raises(ValueError, match="re-route"):
-        put_records(d, [("c", "k1")], n_shards=8)
-    # the matching count still appends fine
-    tips = put_records(d, [("c", "k1")], n_shards=4)
-    assert sum(tips.values()) == 3
+    keys = [f"k{i}" for i in range(20)]
+    put_records(d, [(f"a{k}", k) for k in keys], n_shards=4)
+    first = {r["partition_key"]: sid for sid, rs in _shard_records(d).items() for r in rs}
+    tips = put_records(d, [(f"b{k}", k) for k in keys], n_shards=8)
+    assert len(tips) == 4 and sum(tips.values()) == 40
+    for sid, rs in _shard_records(d).items():
+        for r in rs:
+            assert first[r["partition_key"]] == sid, (r, sid)
 
 
 def test_put_records_routes_by_range_on_resharded_stream(tmp_path):
-    """On a ranged stream (shards.json present) put_records must route by
-    hash RANGE over the OPEN shards like _Writer — the caller's n_shards
-    default would mod-route records into the CLOSED parent a
+    """After a split, put_records routes by hash RANGE over the OPEN shards
+    like _Writer — nothing lands in the CLOSED parent a
     drain-parents-first consumer has already finished."""
     from lagom_kinesis_spark.sources.kinesis_sim import (
-        _load_meta,
         create_stream,
         split_shard,
     )
@@ -770,6 +793,6 @@ def test_null_partition_key_fails_fast(tmp_path):
     the simulator fails at the routing choke point with a clear error, not
     an AttributeError deep inside an executor worker."""
     with pytest.raises(ValueError, match="non-null"):
-        shard_for(None, 4)
+        hash32(None)
     with pytest.raises(ValueError, match="non-null"):
         put_records(str(tmp_path / "s"), [("data", None)])

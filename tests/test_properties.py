@@ -444,3 +444,66 @@ def test_money_fast_path_matches_decimal_path(spark, cents_vals):
     slow = df.agg(money(F.sum(dec("v"))).alias("s")).collect()[0]["s"]
     fast = df.agg(money_sum_units(units("v"), 2).alias("s")).collect()[0]["s"]
     assert slow == fast and isinstance(fast, float)
+
+
+@given(
+    n_shards=st.integers(min_value=1, max_value=16),
+    split=st.none() | st.integers(min_value=0, max_value=15),
+    records=st.lists(
+        st.tuples(
+            st.text(min_size=1, max_size=6),  # partition key
+            st.none() | st.text(min_size=1, max_size=6),  # explicit hash key
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+)
+@settings(max_examples=60, deadline=None)
+def test_put_records_and_writer_place_each_record_alike(n_shards, split, records):
+    """kinesis_sim has one router: the driver-side put_records and the
+    distributed _Writer put every record in the same shard, on a fresh
+    stream of any size and after a split, and that shard is the OPEN one
+    whose hash range contains hash32(explicit hash key or partition key)."""
+    import json
+    import os
+    import tempfile
+
+    from pyspark.sql import Row
+
+    from lagom_kinesis_spark.sources.kinesis_sim import (
+        _Writer,
+        _load_meta,
+        create_stream,
+        hash32,
+        put_records,
+        split_shard,
+    )
+
+    def placement(d):
+        out = {}
+        for s in _load_meta(d):
+            path = os.path.join(d, s["id"], "records.jsonl")
+            if os.path.exists(path):
+                for ln in open(path).read().splitlines():
+                    out[json.loads(ln)["data"]] = s
+        return out
+
+    with tempfile.TemporaryDirectory() as tmp:
+        put_dir, write_dir = os.path.join(tmp, "put"), os.path.join(tmp, "write")
+        for d in (put_dir, write_dir):
+            create_stream(d, n_shards)
+            if split is not None:
+                split_shard(d, f"shard-{split % n_shards:05d}")
+        put_records(put_dir, [(str(i), pk, ehk) for i, (pk, ehk) in enumerate(records)])
+        w = _Writer({"path": write_dir}, overwrite=False)
+        rows = [
+            Row(data=str(i), partition_key=pk, explicit_hash_key=ehk)
+            for i, (pk, ehk) in enumerate(records)
+        ]
+        w.commit([w.write(iter(rows))])
+        put, write = placement(put_dir), placement(write_dir)
+    assert {k: s["id"] for k, s in put.items()} == {k: s["id"] for k, s in write.items()}
+    assert len(put) == len(records)
+    for i, (pk, ehk) in enumerate(records):
+        s = put[str(i)]
+        assert s["status"] == "OPEN" and s["lo"] <= hash32(ehk or pk) < s["hi"]

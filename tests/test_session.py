@@ -4,12 +4,19 @@ it found."""
 
 from __future__ import annotations
 
+import os
 import pathlib
 import re
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
 from lagom_kinesis_spark.session import scoped_confs
+from tests.conftest import SF_DIR
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 SET_KEY = "spark.sql.autoBroadcastJoinThreshold"  # set by get_spark
 UNSET_KEY = "spark.sql.streaming.minBatchesToRetain"  # set by nothing
@@ -39,6 +46,33 @@ def test_scoped_confs_restores_when_body_raises(spark):
 def test_get_spark_disables_console_progress(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.ui.showConsoleProgress") == "false"
+
+
+def test_workers_import_the_package_from_outside_the_checkout(tmp_path):
+    """get_spark gives the Python workers the package: from a cwd outside
+    the checkout, with the checkout on neither PYTHONPATH nor the cwd and
+    only in the driver's sys.path, a query whose DataSource lives in the
+    package runs (the workers must unpickle kinesis_sim)."""
+    script = tmp_path / "outside.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(ROOT)!r})
+        from lagom_kinesis_spark.queries.streaming_ops import kinesis_sim_roundtrip
+        from lagom_kinesis_spark.session import get_spark
+        spark = get_spark("outside-checkout")
+        print("ROWS", kinesis_sim_roundtrip(spark, {SF_DIR!r}).count())
+    """))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.realpath(p) != str(ROOT)
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert re.search(r"^ROWS [1-9]", out.stdout, re.M), out.stdout
 
 
 #: Where a raw conf write is allowed: the tuner and the scoped helper, and

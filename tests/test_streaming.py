@@ -648,6 +648,37 @@ def test_bench_probe_and_thermal_gate_contract():
     bench._thermal_gate(max_wait_s=0)  # returns, never raises
 
 
+def test_probe_and_thermal_gate_read_one_clock(monkeypatch):
+    """The headline gate cools on the clock the probe flags: both read the
+    single-thread unit through bench._single_unit_s, so a reading the probe
+    calls contended keeps the gate cooling, and a clean reading releases
+    it at once."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import bench
+
+    reading, calls, sleeps = {"s": 1.0}, [], []
+
+    def clock(n=1_000_000):
+        calls.append(n)
+        return reading["s"]
+
+    monkeypatch.setattr(bench, "_single_unit_s", clock)
+    monkeypatch.setattr(bench.time, "sleep", sleeps.append)
+    monkeypatch.setenv("SPARK_GRAFT_BURN_REF_S", "0.5")
+    out = bench._contention_probe(n_hashes=20_000)
+    assert calls == [20_000]
+    if out:  # {} allowed on fork-unavailable platforms
+        assert out["single_unit_s"] == 1.0 and out["contended"] is True
+    bench._thermal_gate(max_wait_s=30)  # 1.0 s > 1.25 × 0.5 s: cools once
+    assert sleeps == [30.0] and len(calls) == 3
+    reading["s"] = 0.5
+    bench._thermal_gate(max_wait_s=30)
+    assert sleeps == [30.0] and len(calls) == 4
+
+
 def test_update_mode_chunked_replay_compacts_to_batch_result(spark, tmp_path):
     """The update-mode contract behind stream_tumbling_window's r11 basis
     switch: a SINGLE-batch replay emits each window once (sink holds the
