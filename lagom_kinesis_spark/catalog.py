@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-from lagom_kinesis_spark.session import tune
+from lagom_kinesis_spark.session import memo, tune
 
 #: Every driver-provided fixture table (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -166,29 +166,13 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-#: (session-identity, sf_dir, table) → DataFrame. A DataFrame is an immutable
-#: logical plan, so handing the same one to every caller is safe — and it is
-#: what a real deployment does (tables registered once in a metastore, not a
-#: fresh relation per query). Re-creating the relation per call costs a
-#: parquet footer read + file listing + ~13 conf roundtrips in tune():
-#: measured 0.16-0.63 s of per-query BUILD time at sf0.1 — pure fixed cost.
-#: Keyed on the JVM session identity (identity-memo discipline shared with
-#: fan_out — helpers.memo_by_identity pins the session object so a recycled
-#: id can never serve a plan bound to a DIFFERENT session's state) PLUS the
-#: fixture's mtime/size fingerprint: a fixture regenerated during the
-#: process's lifetime produces a new key, so the fresh file listing is
-#: resolved instead of a cached relation over deleted part files — the same
-#: staleness class io_scratch(source=...) defends against. The stat is ~µs
-#: per load() call, noise next to the 0.16 s it saves.
-_LOAD_CACHE: dict[tuple, tuple[SparkSession, DataFrame]] = {}
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; canonicalizes events.ts (normalize_event_ts).
 
-    Memoized per (session, sf_dir, table, fixture-fingerprint) — see
-    _LOAD_CACHE."""
-    from lagom_kinesis_spark.functions.helpers import memo_by_identity
+    Memoized per session, table and fixture fingerprint: a fresh relation
+    costs 0.16-0.63 s of build time per query at sf0.1, and a regenerated
+    fixture gets a new key. A DataFrame is an immutable plan, so every
+    caller can share one."""
 
     def build():
         tune(spark)
@@ -197,12 +181,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = normalize_event_ts(df)
         return df
 
-    return memo_by_identity(
-        _LOAD_CACHE,
-        spark,
-        (sf_dir, name, fixture_fingerprint(sf_dir, name)),
-        build,
-    )
+    return memo(spark, (sf_dir, name, fixture_fingerprint(sf_dir, name)), build)
 
 
 def stream_dir(sf_dir: str, name: str) -> str:

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from lagom_kinesis_spark.session import memo
+
 # DuckDB view of `events` matching catalog.load('events') exactly (ns → µs floor).
 EVENTS_US_SQL = (
     "SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts, "
@@ -78,11 +80,8 @@ def fan_out(df, min_factor: int = 1, min_bytes: int = 0, by: str | None = None):
     sf10, 6.3 MB: −1.4 s without it). Unknown/non-file sources count as
     large — on a real cluster the split-count check no-ops anyway.
     """
-    # Memoized by input-DataFrame identity: df.rdd.getNumPartitions()
-    # converts the plan to an RDD in the JVM (~0.1-0.2 s) on every call,
-    # and catalog.load now hands out the SAME DataFrame object per
-    # (session, sf_dir, table), so the answer cannot change. The cached
-    # tuple pins the input object so its id() stays valid.
+    # Memoized per input DataFrame: the partition-count probe costs
+    # ~0.1-0.2 s per call, and catalog.load hands out one DataFrame per table.
     def build():
         if min_bytes and _input_bytes(df) < min_bytes:
             return df  # tiny source: the exchange costs more than it buys
@@ -92,7 +91,7 @@ def fan_out(df, min_factor: int = 1, min_bytes: int = 0, by: str | None = None):
             return df
         return df.repartition(target, F.col(by)) if by else df.repartition(target)
 
-    return memo_by_identity(_FAN_CACHE, df, (min_factor, min_bytes, by), build)
+    return memo(df, (min_factor, min_bytes, by), build)
 
 
 def _input_bytes(df) -> int:
@@ -117,30 +116,6 @@ def _input_bytes(df) -> int:
         return total
     except Exception:  # non-file relation (rate source, in-memory, ...)
         return 2**63
-
-
-_FAN_CACHE: dict = {}
-
-
-def memo_by_identity(cache: dict, key_obj, extra_key, build):
-    """Memoize ``build()`` keyed on ``(id(key_obj), extra_key)``.
-
-    The shared identity-memo discipline (used by both this module's
-    fan_out and catalog.load): ``id()`` is only meaningful while that
-    exact object is alive, so the cached value PINS ``key_obj`` — the
-    pin keeps the id from being recycled while the entry exists, and the
-    ``is`` check on lookup documents the invariant. A full clear at 4096
-    entries bounds growth across many sessions; per-entry eviction is
-    deliberately not attempted (entries are tiny, sessions are few)."""
-    key = (id(key_obj), extra_key)
-    hit = cache.get(key)
-    if hit is not None and hit[0] is key_obj:
-        return hit[1]
-    out = build()
-    if len(cache) > 4096:
-        cache.clear()
-    cache[key] = (key_obj, out)
-    return out
 
 
 def hash_build(df):

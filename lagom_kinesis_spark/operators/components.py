@@ -28,9 +28,7 @@ Scale notes:
 
 from __future__ import annotations
 
-import threading
 import uuid
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,23 +47,20 @@ _MIRROR_CONFS = (
     "spark.sql.autoBroadcastJoinThreshold",
 )
 
-#: caller session -> its AQE-off loop session, one clone per caller.
-_LOOP_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-_LOOP_LOCK = threading.Lock()
-
 
 def _loop_session(caller: SparkSession) -> SparkSession:
     """The caller's loop session: cloned and tuned once per caller session
     and reused, so repeated calls add no sessions. AQE is off there, and
     ``_MIRROR_CONFS`` are re-mirrored on every call so it carries what a
     fresh tuned clone of the caller would."""
-    from lagom_kinesis_spark.session import RUNTIME_CONFS, tune
+    from lagom_kinesis_spark.session import RUNTIME_CONFS, memo, tune
 
-    with _LOOP_LOCK:
-        loop = _LOOP_SESSIONS.get(caller)
-        if loop is None:
-            loop = _LOOP_SESSIONS[caller] = tune(caller.newSession())
-            loop.conf.set("spark.sql.adaptive.enabled", "false")
+    def build():
+        loop = tune(caller.newSession())
+        loop.conf.set("spark.sql.adaptive.enabled", "false")
+        return loop
+
+    loop = memo(caller, "cc_loop_session", build)
     for k in _MIRROR_CONFS:
         v = caller.conf.get(k, None)
         if v is None:

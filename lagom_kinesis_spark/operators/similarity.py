@@ -13,6 +13,7 @@ dot products via higher-order array functions — no Python in the hot path.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
@@ -21,15 +22,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lagom_kinesis_spark.catalog import fixture_fingerprint, path_of
+
 
 # ---------------------------------------------------------------------------
 # Cosine similarity (exact) — higher-order functions, Catalyst-visible
 # ---------------------------------------------------------------------------
-
-
-#: (path, mtime_ns, size, n) -> (q_ids, raw_lists, q_vecs float64). Keyed on
-#: fixture file identity like every other fixture-derived cache.
-_PANEL_CACHE: dict = {}
 
 
 def embedding_query_panel(sf_dir: str, n: int):
@@ -47,33 +45,24 @@ def embedding_query_panel(sf_dir: str, n: int):
     Returns (q_ids, raw_lists, q_vecs): ids, the float32 values as
     python lists (for callers that re-ship the raw vectors), and the
     float64 matrix every scoring path uses."""
-    import os
+    return _query_panel(sf_dir, fixture_fingerprint(sf_dir, "embeddings"), n)
 
+
+@functools.lru_cache(maxsize=32)
+def _query_panel(sf_dir: str, _fingerprint: str, n: int):
     import pyarrow.parquet as pq
 
-    from lagom_kinesis_spark.catalog import path_of
-
-    p = path_of(sf_dir, "embeddings")
-    try:
-        st = os.stat(p)
-        key = (p, st.st_mtime_ns, st.st_size, n)
-    except OSError:
-        key = None
-    if key is not None and key in _PANEL_CACHE:
-        return _PANEL_CACHE[key]
     t = pq.read_table(
-        p, columns=["vec_id", "embedding"], filters=[("vec_id", "<", n)]
+        path_of(sf_dir, "embeddings"),
+        columns=["vec_id", "embedding"],
+        filters=[("vec_id", "<", n)],
     )
     ids = t["vec_id"].to_pylist()
     raw = t["embedding"].to_pylist()
     order = sorted(range(len(ids)), key=lambda i: ids[i])
     ids = [int(ids[i]) for i in order]
     raw = [[float(x) for x in raw[i]] for i in order]
-    vecs = np.array(raw, dtype=np.float64)
-    out = (ids, raw, vecs)
-    if key is not None:
-        _PANEL_CACHE[key] = out
-    return out
+    return ids, raw, np.array(raw, dtype=np.float64)
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -14,10 +14,13 @@ Window-start values are emitted as explicit epoch-second buckets
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lagom_kinesis_spark.catalog import (
+    fixture_fingerprint,
     io_scratch,
     normalize_event_ts,
     path_of,
@@ -28,15 +31,8 @@ from lagom_kinesis_spark.functions import events_cte, r6
 from lagom_kinesis_spark.queries.behavior import ATTRIBUTION_ORACLE
 from lagom_kinesis_spark.operators import sketches
 from lagom_kinesis_spark.registry import register
-from lagom_kinesis_spark.session import scoped_confs, tune
+from lagom_kinesis_spark.session import memo, scoped_confs, tune
 from lagom_kinesis_spark.streaming.topics import memory_sink_table
-
-
-#: (path, mtime_ns, size) -> StructType. The probe is pure fixture
-#: metadata, but costs a ~70 ms parquet-footer job per call — paid by EVERY
-#: streaming query entry. Keyed on file identity so a regenerated fixture
-#: re-probes.
-_EVENTS_SCHEMA_CACHE: dict = {}
 
 
 def _events_raw_schema(spark: SparkSession, sf_dir: str):
@@ -45,21 +41,14 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str):
     readStream requires an explicit schema; deriving it from the same batch
     read that catalog.load performs guarantees batch and streaming apply the
     identical ts canonicalization (normalize_event_ts) and can never diverge
-    when the driver regenerates fixtures with a different ts encoding."""
-    import os
-
-    p = path_of(sf_dir, "events")
-    try:
-        st = os.stat(p)
-        key = (p, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
-    if key is not None and key in _EVENTS_SCHEMA_CACHE:
-        return _EVENTS_SCHEMA_CACHE[key]
-    schema = spark.read.parquet(p).schema
-    if key is not None:
-        _EVENTS_SCHEMA_CACHE[key] = schema
-    return schema
+    when the driver regenerates fixtures with a different ts encoding.
+    Memoized per fixture fingerprint: the probe is a ~70 ms footer job paid
+    by every streaming query."""
+    return memo(
+        spark,
+        ("events_schema", fixture_fingerprint(sf_dir, "events")),
+        lambda: spark.read.parquet(path_of(sf_dir, "events")).schema,
+    )
 
 
 def _events_dir_with_sentinel(sf_dir: str) -> str:
@@ -80,8 +69,6 @@ def _events_dir_with_sentinel(sf_dir: str) -> str:
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
-
-    from lagom_kinesis_spark.catalog import fixture_fingerprint, path_of
 
     # Fingerprint-keyed like every other fixture-derived cache: a
     # regenerated events fixture (same encoding, longer time span) would
@@ -148,13 +135,14 @@ def _events_dir_with_sentinel(sf_dir: str) -> str:
     return d
 
 
-#: (path, mtime_ns, size) -> row count, from parquet footers only (no data
-#: read) — same cache discipline as _EVENTS_SCHEMA_CACHE.
-_EVENTS_ROWS_CACHE: dict = {}
-
-
 def _events_num_rows(sf_dir: str) -> int:
-    """Row count of the events fixture from parquet footer metadata."""
+    """Row count of the events fixture from parquet footer metadata,
+    cached on the fixture fingerprint so the footers are read once."""
+    return _events_rows(sf_dir, fixture_fingerprint(sf_dir, "events"))
+
+
+@functools.lru_cache(maxsize=32)
+def _events_rows(sf_dir: str, _fingerprint: str) -> int:
     import glob
     import os
 
@@ -169,25 +157,7 @@ def _events_num_rows(sf_dir: str) -> int:
         if os.path.isdir(p)
         else [p]
     )
-    # Cache key folds the recursive file list (path, mtime_ns, size per
-    # leaf): changes confined to nested subdirs (a new day=/hour= file)
-    # don't touch the top dir's mtime, so a top-dir-only key could serve a
-    # stale count and a stale partition count (ADVICE r10). The glob +
-    # stats are the cheap part; the footer reads are what the cache saves.
-    try:
-        key = tuple(
-            (f, st.st_mtime_ns, st.st_size)
-            for f in files
-            for st in (os.stat(f),)
-        )
-    except OSError:
-        key = None
-    if key is not None and key in _EVENTS_ROWS_CACHE:
-        return _EVENTS_ROWS_CACHE[key]
-    n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    if key is not None:
-        _EVENTS_ROWS_CACHE[key] = n
-    return n
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def stream_shuffle_partitions(sf_dir: str, state: str = "large") -> int:
@@ -1946,22 +1916,18 @@ def _grow_scenario(
         .dropDuplicates(["source", "h"])
     )
     run_dir = fresh_scratch_dir("neardup_grow_run")
-    out = neardup_grow_run(spark, raw, cat_dir, run_dir), cat_dir, run_dir
-    from lagom_kinesis_spark.catalog import fixture_fingerprint
-
-    global _LAST_GROW_RUN
-    _LAST_GROW_RUN = (fixture_fingerprint(sf_dir, "documents"), cat_dir, run_dir)
-    return out
+    return neardup_grow_run(spark, raw, cat_dir, run_dir), cat_dir, run_dir
 
 
-#: (documents fingerprint, cat_dir, run_dir) of the last completed grow
-#: scenario this session — stream_dedup_catalog_compact reuses it instead
-#: of re-executing the whole 2-batch streaming run when both queries run
-#: in one sweep (review r11); outputs are deterministic, so reuse cannot
-#: change the compact result, and the fingerprint key invalidates on a
-#: fixture swap. Only grow/compact touch the "neardup_grow_run" scratch
-#: tag, so the stored run_dir stays alive until the next grow run.
-_LAST_GROW_RUN: tuple[str, str, str] | None = None
+def _recorded_grow(spark: SparkSession, sf_dir: str):
+    """Run the grow scenario and keep it as this session's last grow run,
+    {"run": (documents fingerprint, cat_dir, run_dir)}: compact reuses it
+    rather than re-run the 2-batch stream, whose outputs are deterministic."""
+    out, cat_dir, run_dir = _grow_scenario(spark, sf_dir)
+    memo(spark, "last_grow_run", dict)["run"] = (
+        fixture_fingerprint(sf_dir, "documents"), cat_dir, run_dir
+    )
+    return out, cat_dir, run_dir
 
 
 @register(
@@ -1983,7 +1949,7 @@ def stream_dedup_catalog_grow(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per batch — uniques, history-near-dups, novels, keys added.
     Oracle: the identical two-batch replay in SQL from the shared keyed
     CTEs."""
-    out, _cat, _run = _grow_scenario(spark, sf_dir)
+    out, _cat, _run = _recorded_grow(spark, sf_dir)
     return out
 
 
@@ -2042,25 +2008,24 @@ def stream_dedup_catalog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     so any uniqueness violation breaks the hash match. The three counts
     are scalar aggregates (bounded driver values by construction).
     Reuses the last completed grow run of this session when its outputs
-    are still on disk (see _LAST_GROW_RUN) — the grow outputs are
+    are still on disk (see _recorded_grow) — the grow outputs are
     deterministic, so re-executing the streaming pipeline inside every
     compact call bought nothing but wall-clock (review r11)."""
     import glob as _glob
     import os as _os
 
-    from lagom_kinesis_spark.catalog import fixture_fingerprint
     from lagom_kinesis_spark.streaming.topics import fresh_scratch_dir
 
     tune(spark)
-    fp = fixture_fingerprint(sf_dir, "documents")
+    last = memo(spark, "last_grow_run", dict).get("run")
     if (
-        _LAST_GROW_RUN is not None
-        and _LAST_GROW_RUN[0] == fp
-        and _glob.glob(_os.path.join(_LAST_GROW_RUN[2], "res", "b=*"))
+        last is not None
+        and last[0] == fixture_fingerprint(sf_dir, "documents")
+        and _glob.glob(_os.path.join(last[2], "res", "b=*"))
     ):
-        _, cat_dir, run_dir = _LAST_GROW_RUN
+        _, cat_dir, run_dir = last
     else:
-        _rollup, cat_dir, run_dir = _grow_scenario(spark, sf_dir)
+        _rollup, cat_dir, run_dir = _recorded_grow(spark, sf_dir)
 
     comp_dir = _os.path.join(fresh_scratch_dir("neardup_compact"), "cat")
     n_base, n_delta, n_comp = compact_band_catalog(

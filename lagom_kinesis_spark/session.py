@@ -17,6 +17,8 @@ AQE shrinks from there; locally we pin it to the core count.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
@@ -81,34 +83,33 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-#: Sessions already tuned: tune() is called on every catalog.load and from
-#: many query entry points — ~13 py4j conf roundtrips each time adds tens
-#: of ms of pure fixed cost per query. Confs set once on a session stay set
-#: (every other in-repo conf change goes through :func:`scoped_confs`,
-#: which restores the previous state), so re-applying per call buys
-#: nothing. Keyed on id(session) with the session object PINNED in the
-#: value: the earlier JVM identity hashCode() is NOT unique across
-#: sessions, and a collision would silently skip correctness-critical
-#: confs (UTC timezone, nanosAsLong) on the colliding session. The pin
-#: makes id() reuse safe (a recycled id can't alias — the stored object
-#: comparison fails); worst case for a re-wrapped JVM session is one
-#: redundant idempotent re-tune.
-_TUNED: dict[int, SparkSession] = {}
+#: owner -> {key: value}; see :func:`memo`.
+_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_MEMO_LOCK = threading.Lock()
 
 
-def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent, cheap;
-    memoized per live session object)."""
-    key = id(spark)
-    if _TUNED.get(key) is spark:
-        return spark
-    if len(_TUNED) > 64:  # bound growth across many short-lived sessions
-        _TUNED.clear()
-    # Memoize only AFTER every conf applied (or was a legitimately static
-    # conf): memoizing up front turned one transient py4j error while
-    # setting a correctness-critical conf (UTC timezone, nanosAsLong)
-    # into a permanently mistuned session — every later call hit the
-    # memo and the timestamp oracles mismatched with no error anywhere.
+def memo(owner, key, build):
+    """``build()``, computed once per live ``owner`` and ``key``.
+
+    ``owner`` is a session or DataFrame: neither defines ``__eq__``, so the
+    weak key is the object's identity, and its entries die with it.
+    ``build`` runs outside the lock and the first stored value wins, so
+    concurrent callers share one value and a slow build blocks no one. A
+    ``build`` that raises stores nothing."""
+    with _MEMO_LOCK:
+        slot = _MEMO.get(owner)
+        if slot is not None and key in slot:
+            return slot[key]
+    value = build()
+    with _MEMO_LOCK:
+        return _MEMO.setdefault(owner, {}).setdefault(key, value)
+
+
+class _Untuned(Exception):
+    """A runtime conf failed to apply for a reason that may not recur."""
+
+
+def _apply_runtime_confs(spark: SparkSession) -> None:
     ok = True
     for k, v in RUNTIME_CONFS.items():
         try:
@@ -118,8 +119,20 @@ def tune(spark: SparkSession) -> SparkSession:
             if "static" in str(e).lower() or "CANNOT_MODIFY" in str(e):
                 continue  # static conf on this build — leave as-is
             ok = False  # transient: retry on the next tune() call
-    if ok:
-        _TUNED[key] = spark
+    if not ok:
+        raise _Untuned
+
+
+def tune(spark: SparkSession) -> SparkSession:
+    """Apply runtime confs to an existing session, once per session: the
+    ~13 py4j conf roundtrips cost tens of ms, and tune runs on every query.
+    A session is memoized only after every conf applied or was static, so
+    a transient error is retried on the next call rather than leaving a
+    session silently without its UTC timezone or nanosAsLong."""
+    try:
+        memo(spark, "tuned", lambda: _apply_runtime_confs(spark))
+    except _Untuned:
+        pass
     return spark
 
 

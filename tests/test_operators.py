@@ -593,6 +593,34 @@ def test_fan_out_widens_narrow_scans_and_memoizes(spark):
     assert fan_out(narrow) is widened
 
 
+def test_embedding_query_panel_rereads_a_rewritten_fixture(tmp_path):
+    """The driver-side query panel is cached on the fixture fingerprint: a
+    repeat call returns the cached arrays, and a rewritten embeddings file
+    is read again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lagom_kinesis_spark.operators.similarity import embedding_query_panel
+
+    def write(ids, vecs):
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            }),
+            str(tmp_path / "embeddings.parquet"),
+        )
+
+    write([1, 0, 5], [[1.0, 0.0], [0.0, 1.0], [9.0, 9.0]])
+    ids, raw, vecs = embedding_query_panel(str(tmp_path), 2)
+    assert ids == [0, 1] and raw == [[0.0, 1.0], [1.0, 0.0]]
+    assert embedding_query_panel(str(tmp_path), 2)[2] is vecs
+    write([1, 0, 5, 7], [[2.0, 0.0], [0.0, 2.0], [9.0, 9.0], [3.0, 3.0]])
+    ids, raw, vecs2 = embedding_query_panel(str(tmp_path), 2)
+    assert ids == [0, 1] and raw == [[0.0, 2.0], [2.0, 0.0]]
+    assert vecs2.tolist() == raw
+
+
 def test_fan_out_min_bytes_gates_tiny_file_sources(spark, tmp_path):
     """With min_bytes set, a tiny file-backed scan keeps its no-shuffle
     plan (the exchange would cost more than it parallelizes), a source
@@ -984,11 +1012,11 @@ def test_connected_components_reuses_one_loop_session(spark, monkeypatch):
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
     want = [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
     assert sorted(map(tuple, components.connected_components(pairs).collect())) == want
-    loop = components._LOOP_SESSIONS[spark]
+    loop = components._loop_session(spark)
     with scoped_confs(spark, {"spark.sql.shuffle.partitions": "3"}):
         assert sorted(map(tuple, components.connected_components(pairs).collect())) == want
         assert loop.conf.get("spark.sql.shuffle.partitions") == "3"
-    assert components._LOOP_SESSIONS[spark] is loop
+    assert components._loop_session(spark) is loop
     assert len(clones) <= 1  # 0 when an earlier test already made the clone
     assert loop.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -1,19 +1,27 @@
 """Session conf discipline: ``session.scoped_confs`` is the one way engine
 code changes a conf on the caller's session, and it puts back exactly what
-it found."""
+it found. ``session.memo`` is the one per-session / per-DataFrame cache."""
 
 from __future__ import annotations
 
+import ast
+import gc
 import os
 import pathlib
 import re
 import subprocess
 import sys
 import textwrap
+import threading
+import time
+import weakref
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
-from lagom_kinesis_spark.session import scoped_confs
+from lagom_kinesis_spark.catalog import load
+from lagom_kinesis_spark.functions.helpers import fan_out
+from lagom_kinesis_spark.session import RUNTIME_CONFS, memo, scoped_confs, tune
 from tests.conftest import SF_DIR
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
@@ -92,3 +100,107 @@ def test_no_conf_writes_outside_scoped_confs():
         if pat.search(line)
     ]
     assert offenders == [], f"use session.scoped_confs instead: {offenders}"
+
+
+def test_no_id_keys_or_module_caches():
+    """Engine caches go through session.memo or a fingerprint-keyed
+    lru_cache: no ``id()`` key, and no module-level ``*_CACHE`` dict."""
+    pkg = ROOT / "lagom_kinesis_spark"
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        rel = p.relative_to(pkg)
+        offenders += [
+            f"{rel}:{n.lineno} id()"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Name)
+            and n.func.id == "id"
+        ]
+        for stmt in tree.body:
+            targets = (
+                stmt.targets if isinstance(stmt, ast.Assign)
+                else [stmt.target] if isinstance(stmt, ast.AnnAssign)
+                else []
+            )
+            offenders += [
+                f"{rel}:{stmt.lineno} {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
+            ]
+    assert offenders == [], f"use session.memo instead: {offenders}"
+
+
+class _Owner:
+    """A weak-referenceable memo owner, like a session or a DataFrame."""
+
+
+def test_memo_entries_die_with_their_owner():
+    owner = _Owner()
+    value = memo(owner, "k", _Owner)
+    assert memo(owner, "k", lambda: pytest.fail("rebuilt")) is value
+    owner_ref, value_ref = weakref.ref(owner), weakref.ref(value)
+    del owner, value
+    gc.collect()
+    assert owner_ref() is None
+    assert value_ref() is None
+
+
+def test_memo_concurrent_callers_share_one_value():
+    owner, start = _Owner(), threading.Barrier(8)
+
+    def build():
+        time.sleep(0.05)  # a slow build: every caller misses first
+        return object()
+
+    def call(_):
+        start.wait(timeout=30)
+        return memo(owner, "k", build)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(call, range(8), timeout=60))
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(v is got[0] for v in got)
+    assert memo(owner, "k", build) is got[0]
+
+
+class _FlakyConf:
+    """conf.set raises a transient (non-static) error once for one key."""
+
+    def __init__(self, flaky_key):
+        self.values, self.gets, self.flaky = {}, 0, {flaky_key}
+
+    def get(self, key, default=None):
+        self.gets += 1
+        return self.values.get(key, default)
+
+    def set(self, key, value):
+        if key in self.flaky:
+            self.flaky.discard(key)
+            raise RuntimeError("py4j: Answer from Java side is empty")
+        self.values[key] = value
+
+
+def test_tune_retries_after_a_transient_conf_error():
+    key = "spark.sql.session.timeZone"
+    session = _Owner()
+    session.conf = _FlakyConf(key)
+    tune(session)
+    assert key not in session.conf.values
+    assert len(session.conf.values) == len(RUNTIME_CONFS) - 1
+    tune(session)  # not memoized: the next call retries and sets it
+    assert session.conf.values == RUNTIME_CONFS
+    gets = session.conf.gets
+    tune(session)  # tuned now: memoized, no conf roundtrip
+    assert session.conf.gets == gets
+
+
+def test_load_and_fan_out_hit_their_memo(spark):
+    docs = load(spark, SF_DIR, "documents")
+    assert load(spark, SF_DIR, "documents") is docs
+    assert fan_out(docs) is fan_out(docs)
+    assert load(spark.newSession(), SF_DIR, "documents") is not docs

@@ -655,18 +655,29 @@ def test_probe_and_thermal_gate_read_one_clock(monkeypatch):
     it at once."""
     import os
     import sys
+    import threading
+    import time
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
 
     reading, calls, sleeps = {"s": 1.0}, [], []
+    real_sleep, me = time.sleep, threading.get_ident()
 
     def clock(n=1_000_000):
         calls.append(n)
         return reading["s"]
 
+    def sleep(s):
+        # time.sleep is patched process-wide: py4j's client thread keeps
+        # sleeping in the background, and only this thread's calls count.
+        if threading.get_ident() == me:
+            sleeps.append(s)
+        else:
+            real_sleep(s)
+
     monkeypatch.setattr(bench, "_single_unit_s", clock)
-    monkeypatch.setattr(bench.time, "sleep", sleeps.append)
+    monkeypatch.setattr(bench.time, "sleep", sleep)
     monkeypatch.setenv("SPARK_GRAFT_BURN_REF_S", "0.5")
     out = bench._contention_probe(n_hashes=20_000)
     assert calls == [20_000]
@@ -1134,6 +1145,40 @@ def test_catalog_grow_resumes_after_compaction_handoff(spark, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def test_compact_reuses_a_grow_run_only_from_its_own_session(
+    spark, monkeypatch, tmp_path
+):
+    """stream_dedup_catalog_compact reuses the grow run its own session
+    recorded, and a session that ran no grow runs its own. The grow
+    scenario and the compaction are stubbed, so no stream runs."""
+    from lagom_kinesis_spark.queries import streaming_ops as so
+    from tests.conftest import SF_DIR
+
+    grows, compacted = [], []
+
+    def grow(sess, sf_dir):
+        run_dir = tmp_path / f"run{len(grows)}"
+        (run_dir / "res" / "b=0").mkdir(parents=True)
+        grows.append(sess)
+        return sess.range(1), str(tmp_path / "cat"), str(run_dir)
+
+    def compact(sess, base_dir, grow_root, out_dir, n_files=4):
+        compacted.append(grow_root)
+        return 1, 2, 3
+
+    monkeypatch.setattr(so, "_grow_scenario", grow)
+    monkeypatch.setattr(so, "compact_band_catalog", compact)
+    first = spark.newSession()
+    so.stream_dedup_catalog_grow(first, SF_DIR)
+    assert so.stream_dedup_catalog_compact(first, SF_DIR).collect() == [(1, 2, 3)]
+    assert grows == [first]
+    assert compacted == [str(tmp_path / "run0" / "grow")]
+    other = spark.newSession()
+    so.stream_dedup_catalog_compact(other, SF_DIR)
+    assert grows == [first, other]
+    assert compacted[-1] == str(tmp_path / "run1" / "grow")
 
 
 def test_events_num_rows_counts_nested_layouts(spark, tmp_path):
